@@ -77,27 +77,6 @@ RASTER_CHUNKS = StructType(
     ]
 )
 
-# B5 — mosaic manifest: replaces the reference's GTI FlatGeobuf file
-# (metadata set at flytemosaic/mosaics.py:85-111) with a plain table —
-# planning is then a pure metadata query (SURVEY §4).
-MOSAIC_MANIFEST = StructType(
-    [
-        StructField("feature", StringType(), False),
-        StructField("datetime", TimestampType(), False),
-        StructField("url", StringType(), False),
-        StructField("dtype", StringType(), False),
-        StructField("nodata", StringType(), False),
-        StructField("band_count", IntegerType(), False),
-        StructField("resx", DoubleType(), False),
-        StructField("resy", DoubleType(), False),
-        StructField("minx", DoubleType(), False),
-        StructField("miny", DoubleType(), False),
-        StructField("maxx", DoubleType(), False),
-        StructField("maxy", DoubleType(), False),
-        StructField("srs", StringType(), False),
-    ]
-)
-
 # Multimodal media table: opaque binary payload + typed metadata.
 MEDIA = StructType(
     [

@@ -1,5 +1,7 @@
 """Zarr-v2-compatible chunked array store — template + region-parallel
-writes, no zarr dependency.
+writes, no zarr dependency. This module is the only code that knows
+the on-disk format; every reader and writer in the engine goes
+through it.
 
 Mirrors the reference's two-phase sink (SURVEY §2.1 S9/S10): a
 metadata-only template is written first (reference: ``to_zarr(...,
@@ -8,14 +10,29 @@ disjoint chunk regions in parallel (``to_zarr(store, region=...)``,
 flyte/build.py:150-176). Because write partitions are disjoint by
 construction (the planner invariant, flytemosaic/mosaics.py:298-303),
 no commit protocol is needed beyond template-then-fill, and retries
-are idempotent (a chunk file is simply overwritten with identical
+are idempotent (a chunk file is simply replaced with identical
 bytes).
 
 The on-disk layout is genuine Zarr v2 — ``.zarray``/``.zattrs`` JSON
 plus C-order chunk files named ``t.b.y.x`` (compressor null, zlib,
-lz4, or zstd — numcodecs ids) — so
-any Zarr reader can open the result. Edge chunks are padded with the
+lz4, zstd or snappy — numcodecs ids, ``sources/codecs.py``) — so any
+Zarr reader can open the result. Edge chunks are padded with the
 fill value, as the format requires.
+
+The format in one place:
+
+- ``chunk_files`` lists committed chunks by grid index. One name rule
+  (``chunk_index``) decides what is a chunk, so a writer's in-flight
+  or abandoned ``<chunk>.tmp-<hex>`` file and the metadata never are;
+- ``read_chunk`` / ``write_chunk`` decode / encode one chunk; writes
+  go to a uuid4 temp name and ``os.replace`` (``write_atomic``), so
+  concurrent or retried attempts never share a temp file;
+- ``write_region`` splits one chunk-aligned block on chunk boundaries;
+- ``read_store`` is the distributed scan: the ``chunkstore`` Python
+  DataSource (``sources/chunkstore_v2.py``), which plans from chunk
+  names alone and decodes only the chunks that survive pushed filters
+  on the origin columns — the reference's metadata-only GTI planning
+  (flytemosaic/mosaics.py:33-39).
 """
 
 from __future__ import annotations
@@ -23,16 +40,19 @@ from __future__ import annotations
 import json
 import math
 import os
+import re
+import uuid
+import weakref
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flytemosaic_spark.sources.codecs import (
     compress_chunk,
     decompress_chunk,
+    normalize_compressor,
 )
 
 _DTYPES = {
@@ -42,6 +62,9 @@ _DTYPES = {
     "uint16": "<u2",
     "int32": "<i4",
 }
+
+# A committed chunk file is exactly 't.b.y.x'.
+_CHUNK_NAME = re.compile(r"(\d+)\.(\d+)\.(\d+)\.(\d+)")
 
 
 def write_template(
@@ -66,8 +89,6 @@ def write_template(
     100 TB the win is object-store bytes and network, paid with
     executor CPU — level-1 zlib or lz4 is the usual sweet spot for
     float rasters."""
-    from flytemosaic_spark.sources.codecs import normalize_compressor
-
     if compressor is None and compression_level is not None:
         compressor = int(compression_level)
     os.makedirs(path, exist_ok=True)
@@ -92,60 +113,107 @@ def read_template(path: str) -> dict:
         return json.load(f)
 
 
-def write_region_chunks(chunks_df: DataFrame, path: str) -> int:
-    """S10 — executor-side parallel region writes.
+def _fill(meta: dict) -> float:
+    return math.nan if meta["fill_value"] in ("NaN", None) else float(meta["fill_value"])
 
-    Input rows: ``(t, b0, y0, x0, shape array<int>, payload
-    array<float>)`` where (t, b0, y0, x0) is the region origin in
-    *elements* and shape is the block shape ``[nb, ny, nx]`` for one
-    time slice. Each row may span several store chunks; the row is
-    split on chunk boundaries and each chunk file is written whole
-    (padded with fill at array edges). Distinct rows never touch the
-    same chunk file when the partition plan is disjoint and
-    chunk-aligned — enforced upstream by the planner.
+
+def chunk_name(idx: tuple[int, ...]) -> str:
+    return ".".join(map(str, idx))
+
+
+def chunk_index(name: str) -> tuple[int, int, int, int] | None:
+    """Grid index ``(t, b, y, x)`` of a committed chunk file name; None
+    for anything else (a writer's temp file, the metadata)."""
+    m = _CHUNK_NAME.fullmatch(name)
+    return tuple(map(int, m.groups())) if m else None
+
+
+def chunk_files(path: str) -> list[tuple[int, int, int, int]]:
+    """Sorted grid indices of every committed chunk in the store — the
+    metadata-only listing every planner and reader starts from."""
+    return sorted(filter(None, map(chunk_index, os.listdir(path))))
+
+
+def read_chunk(path: str, meta: dict, idx: tuple[int, ...]) -> np.ndarray:
+    """One chunk, decompressed, as a ``meta["chunks"]``-shaped array of
+    the store dtype (read-only view of the decoded bytes)."""
+    with open(os.path.join(path, chunk_name(idx)), "rb") as fh:
+        raw = decompress_chunk(fh.read(), meta.get("compressor"))
+    return np.frombuffer(raw, dtype=meta["dtype"]).reshape(meta["chunks"])
+
+
+def write_atomic(dst: str, data: bytes) -> None:
+    """Write ``dst`` whole or not at all: the bytes go to a temp name
+    carrying a uuid4 (unique across retries, processes and hosts on a
+    shared file system), then ``os.replace``. A failed write removes
+    its temp file; a killed writer's leftover is invisible to
+    ``chunk_files``."""
+    tmp = f"{dst}.tmp-{uuid.uuid4().hex}"
+    try:
+        with open(tmp, "wb") as f:
+            f.write(data)
+        os.replace(tmp, dst)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+
+
+def write_chunk(path: str, meta: dict, idx: tuple[int, ...], chunk: np.ndarray) -> None:
+    """Compress and atomically write one whole chunk (any array with
+    the chunk's element count, cast to the store dtype)."""
+    data = np.ascontiguousarray(chunk, dtype=meta["dtype"]).reshape(meta["chunks"])
+    write_atomic(
+        os.path.join(path, chunk_name(idx)),
+        compress_chunk(data.tobytes(), meta.get("compressor")),
+    )
+
+
+def write_region(path: str, meta: dict, row) -> int:
+    """Write one region row ``(t, b0, y0, x0, shape, payload)``: the
+    origin is in *elements* and chunk-aligned, ``shape`` is the block
+    shape ``[nb, ny, nx]`` of one time slice. The block is split on
+    chunk boundaries and each chunk file is written whole (padded with
+    fill at array edges). Returns the number of chunk files written."""
+    ct, cb, cy, cx = meta["chunks"]
+    t, b0, y0, x0 = int(row.t), int(row.b0), int(row.y0), int(row.x0)
+    if t % ct or b0 % cb or y0 % cy or x0 % cx:
+        raise ValueError(f"region origin {(t, b0, y0, x0)} is not chunk-aligned")
+    block = np.asarray(row.payload, dtype=meta["dtype"]).reshape(row.shape)
+    nb, ny, nx = block.shape
+    n = 0
+    for byi in range(0, ny, cy):
+        for bxi in range(0, nx, cx):
+            for bbi in range(0, nb, cb):
+                chunk = np.full((cb, cy, cx), _fill(meta), dtype=meta["dtype"])
+                sub = block[bbi : bbi + cb, byi : byi + cy, bxi : bxi + cx]
+                chunk[: sub.shape[0], : sub.shape[1], : sub.shape[2]] = sub
+                idx = (t // ct, (b0 + bbi) // cb, (y0 + byi) // cy, (x0 + bxi) // cx)
+                write_chunk(path, meta, idx, chunk)
+                n += 1
+    return n
+
+
+def write_region_chunks(chunks_df: DataFrame, path: str) -> int:
+    """S10 — executor-side parallel region writes of ``(t, b0, y0, x0,
+    shape array<int>, payload array<float>)`` rows (``write_region``).
+    Distinct rows never touch the same chunk file when the partition
+    plan is disjoint and chunk-aligned — enforced upstream by the
+    planner.
 
     Returns the number of chunk files written.
     """
+    import pandas as pd  # not at module level: scan planning imports this module
+
     meta = read_template(path)
-    zshape, zchunks, zdtype = meta["shape"], meta["chunks"], meta["dtype"]
-    fill = math.nan if meta["fill_value"] in ("NaN", None) else float(meta["fill_value"])
-    comp = meta.get("compressor")
 
     def write_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n_written = 0
-        ct, cb, cy, cx = zchunks
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                nb, ny, nx = row.shape
-                block = np.asarray(row.payload, dtype=zdtype).reshape(nb, ny, nx)
-                t, b0, y0, x0 = int(row.t), int(row.b0), int(row.y0), int(row.x0)
-                assert t % ct == 0 and b0 % cb == 0 and y0 % cy == 0 and x0 % cx == 0, (
-                    "region origin must be chunk-aligned"
-                )
-                for byi in range(0, ny, cy):
-                    for bxi in range(0, nx, cx):
-                        for bbi in range(0, nb, cb):
-                            cidx = (
-                                t // ct,
-                                (b0 + bbi) // cb,
-                                (y0 + byi) // cy,
-                                (x0 + bxi) // cx,
-                            )
-                            chunk = np.full((cb, cy, cx), fill, dtype=zdtype)
-                            sub = block[
-                                bbi : bbi + cb, byi : byi + cy, bxi : bxi + cx
-                            ]
-                            chunk[: sub.shape[0], : sub.shape[1], : sub.shape[2]] = sub
-                            fname = os.path.join(path, ".".join(map(str, cidx)))
-                            tmp = fname + ".tmp"
-                            payload_bytes = compress_chunk(
-                                chunk.tobytes(order="C"), comp
-                            )
-                            with open(tmp, "wb") as f:
-                                f.write(payload_bytes)
-                            os.replace(tmp, fname)  # atomic → idempotent retries
-                            n_written += 1
-        yield pd.DataFrame({"n_written": [n_written]})
+        n = sum(
+            write_region(path, meta, row)
+            for pdf in batches
+            for row in pdf.itertuples(index=False)
+        )
+        yield pd.DataFrame({"n_written": [n]})
 
     counts = chunks_df.mapInPandas(write_partition, "n_written long").agg(
         F.sum("n_written").alias("n")
@@ -153,65 +221,52 @@ def write_region_chunks(chunks_df: DataFrame, path: str) -> int:
     return int(counts.collect()[0]["n"])
 
 
+# Per session, the path and DataFrame of the last ``read_store`` scan.
+# Each ``load()`` costs one Python round trip that instantiates the
+# DataSource; queries built on a reused DataFrame skip it (0.2 s of a
+# 0.75 s one-chunk read on 4 cores). Chunks are listed per query, so
+# a reused scan still sees every chunk committed since.
+_last_scan: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def read_store(spark: SparkSession, path: str) -> DataFrame:
-    """S5 — chunk-manifest scan of a store: list chunk files into a
-    manifest DataFrame (pure metadata), then decode payloads in
-    parallel with mapInPandas. Column pruning/limit on the manifest
-    prunes chunk reads — the metadata-only planning property the
-    reference engineered into its GTI files (SURVEY §4)."""
-    meta = read_template(path)
-    zdtype, zchunks = meta["dtype"], meta["chunks"]
-    comp = meta.get("compressor")
-    names = [n for n in os.listdir(path) if not n.startswith(".")]
-    manifest = spark.createDataFrame(
-        [(os.path.join(path, n), *map(int, n.split("."))) for n in names],
-        "file string, t int, b int, yi int, xi int",
-    )
+    """S5 — distributed scan of a store: ``spark.read.format("chunkstore")``
+    with one row ``(t, b0, y0, x0, shape, payload)`` per chunk. Planning
+    lists chunk names only; filters on ``t``/``b0``/``y0``/``x0`` are
+    pushed into the listing, so chunks they exclude are never opened.
+    Registers the source on first use in a session; a repeated call for
+    the same path returns the same DataFrame."""
+    from flytemosaic_spark.sources.chunkstore_v2 import SCHEMA, register
 
-    def load(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def read_chunk(f: str) -> np.ndarray:
-            with open(f, "rb") as fh:
-                raw = fh.read()
-            return np.frombuffer(
-                decompress_chunk(raw, comp), dtype=zdtype
-            ).astype("f4")
-
-        for pdf in batches:
-            payloads = [read_chunk(f) for f in pdf["file"]]
-            yield pd.DataFrame(
-                {
-                    "t": pdf["t"] * zchunks[0],
-                    "b0": pdf["b"] * zchunks[1],
-                    "y0": pdf["yi"] * zchunks[2],
-                    "x0": pdf["xi"] * zchunks[3],
-                    "shape": [list(zchunks[1:])] * len(pdf),
-                    "payload": payloads,
-                }
-            )
-
-    return manifest.repartition(
-        max(1, min(len(names), spark.sparkContext.defaultParallelism))
-    ).mapInPandas(load, "t int, b0 int, y0 int, x0 int, shape array<int>, payload array<float>")
+    last = _last_scan.get(spark)
+    if last is None:
+        register(spark)
+    if last is None or last[0] != path:
+        scan = (
+            spark.read.format("chunkstore")
+            .schema(SCHEMA)
+            .option("path", path)
+            .load()
+            # Spark keeps a relation's last pushdown result (the pruned
+            # chunk list) and reuses it for a later query on the same
+            # DataFrame that pushes no filter. This always-true filter
+            # makes every query push one, so each plans its own list.
+            .where(F.col("t") >= 0)
+        )
+        _last_scan[spark] = last = (path, scan)
+    return last[1]
 
 
 def read_array(path: str) -> np.ndarray:
     """Driver-side full-array reader (tests/small stores only)."""
     meta = read_template(path)
-    shape, chunks, dtype = meta["shape"], meta["chunks"], meta["dtype"]
-    fill = math.nan if meta["fill_value"] in ("NaN", None) else float(meta["fill_value"])
-    comp = meta.get("compressor")
-    out = np.full(shape, fill, dtype=dtype)
-    for name in os.listdir(path):
-        if name.startswith("."):
-            continue
-        idx = list(map(int, name.split(".")))
-        with open(os.path.join(path, name), "rb") as fh:
-            raw = fh.read()
-        block = np.frombuffer(
-            decompress_chunk(raw, comp), dtype=dtype
-        ).reshape(chunks)
+    shape, chunks = meta["shape"], meta["chunks"]
+    out = np.full(shape, _fill(meta), dtype=meta["dtype"])
+    for idx in chunk_files(path):
         sl = tuple(
             slice(i * c, min((i + 1) * c, s)) for i, c, s in zip(idx, chunks, shape)
         )
-        out[sl] = block[tuple(slice(0, s.stop - s.start) for s in sl)]
+        out[sl] = read_chunk(path, meta, idx)[
+            tuple(slice(0, s.stop - s.start) for s in sl)
+        ]
     return out

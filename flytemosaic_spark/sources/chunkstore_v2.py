@@ -7,27 +7,40 @@ DataSource API so the store is a first-class format:
           .option("path", store).load())           # parallel scan
     df.write.format("chunkstore").option("path", store).mode("append")
 
+It is also the engine's one distributed scan: ``chunkstore.read_store``
+returns it. This module is a thin adapter; the format (chunk names,
+chunk decode/encode, region split) lives in ``sources/chunkstore.py``.
+
 Scale properties mirrored from the reference's GTI metadata planning
 (flytemosaic/mosaics.py:33-39):
 
 - **planning is metadata-only** — partitions are derived from chunk
-  file names (``t.b.y.x``), no chunk bytes are touched at plan time;
+  file names (``chunk_files``), no chunk bytes are touched at plan time;
 - **filter pushdown prunes files**: comparisons on the origin columns
   (t, b0, y0, x0) are consumed by ``pushFilters`` and applied to the
   file-name-derived origins, so pruned chunks are never opened — the
   same effect as parquet row-group min/max skipping;
-- **one task reads a bounded batch of chunks** and yields Arrow
-  batches, so executor memory is bounded regardless of store size.
+- **tasks share the chunks evenly** (one task per core of the planning
+  host; every Python task costs tens of milliseconds, so fewer beat
+  one per chunk) and each yields Arrow batches of at most
+  ``_CHUNKS_PER_BATCH`` chunks, so executor memory is bounded
+  regardless of store size.
+
+Spark keeps a relation's last pushdown result (the pruned partitions)
+and reuses it for a later query on the same DataFrame that pushes no
+filter, so a ``load()``-ed DataFrame reused that way returns the
+previous query's chunks. ``read_store`` guards against it with an
+always-true origin filter; direct users should ``load()`` per query.
 """
 
 from __future__ import annotations
 
-import math
+import operator
 import os
-import re
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -46,34 +59,65 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from flytemosaic_spark.sources.chunkstore import (
+    chunk_files,
+    chunk_index,
+    chunk_name,
+    read_chunk,
+    read_template,
+    write_region,
+)
+
 SCHEMA = "t int, b0 int, y0 int, x0 int, shape array<int>, payload array<float>"
 _ORIGIN_COLS = ("t", "b0", "y0", "x0")
-_FILES_PER_TASK = 32
+_CHUNKS_PER_BATCH = 32
 
-# Committed chunk files are exactly 't.b.y.x'; anything else (a
-# writer's in-flight '<name>.tmp-<pid>', stray metadata) must never
-# reach map(int, ...) — a stream batch that lists mid-write would
-# crash otherwise, and tailing a live writer is the stream reader's
-# stated purpose.
-_CHUNK_NAME_RE = re.compile(r"^\d+\.\d+\.\d+\.\d+$")
+# Origin-column comparisons the reader consumes: (origin, filter value)
+# -> keep the chunk. Origins are never null.
+_PRUNE = {
+    EqualTo: operator.eq,
+    GreaterThan: operator.gt,
+    GreaterThanOrEqual: operator.ge,
+    LessThan: operator.lt,
+    LessThanOrEqual: operator.le,
+    In: lambda v, values: v in values,
+    IsNotNull: lambda v, _: True,
+}
 
 
-def _read_meta(path: str) -> dict:
-    import json
+def _scan_batch(path: str, meta: dict, chunks: list[tuple]):
+    """Scan rows for ``chunks`` as one Arrow batch. Payloads go from
+    the decoded numpy chunks straight into one Arrow buffer — no
+    per-element Python objects."""
+    import pyarrow as pa
 
-    with open(os.path.join(path, ".zarray")) as f:
-        return json.load(f)
+    ct, cb, cy, cx = meta["chunks"]
+    origins = np.asarray(chunks, np.int32).reshape(-1, 4) * np.asarray(
+        meta["chunks"], np.int32
+    )
+    size = ct * cb * cy * cx
+    flat = np.concatenate(
+        [np.empty(0, "f4")] + [read_chunk(path, meta, i).ravel() for i in chunks]
+    ).astype("f4", copy=False)
+    offsets = pa.array(np.arange(0, flat.size + 1, size, dtype=np.int32))
+    return pa.record_batch(
+        {
+            **{c: pa.array(origins[:, k]) for k, c in enumerate(_ORIGIN_COLS)},
+            "shape": pa.array([[cb, cy, cx]] * len(chunks), pa.list_(pa.int32())),
+            "payload": pa.ListArray.from_arrays(offsets, pa.array(flat)),
+        }
+    )
 
 
 @dataclass
 class _ChunkBatch(InputPartition):
-    files: list[str]
+    chunks: list[tuple]
 
 
 class ChunkStoreReader(DataSourceReader):
     def __init__(self, options):
         self.path = options["path"]
-        self.meta = _read_meta(self.path)
+        self.meta = read_template(self.path)
         self._pushed: list[Filter] = []
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
@@ -85,74 +129,29 @@ class ChunkStoreReader(DataSourceReader):
         filters must not leak into this one."""
         self._pushed = []
         for f in filters:
-            col = f.attribute[0] if len(f.attribute) == 1 else None
-            if col in _ORIGIN_COLS and isinstance(
-                f,
-                (EqualTo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, In),
-            ):
+            if len(f.attribute) == 1 and f.attribute[0] in _ORIGIN_COLS and type(f) in _PRUNE:
                 self._pushed.append(f)
-            elif col in _ORIGIN_COLS and isinstance(f, IsNotNull):
-                self._pushed.append(f)  # origins are never null
             else:
                 yield f  # not consumed
 
-    def _origin_ok(self, origin: dict[str, int]) -> bool:
-        for f in self._pushed:
-            if isinstance(f, IsNotNull):
-                continue  # origins are never null
-            v = origin[f.attribute[0]]
-            if isinstance(f, EqualTo) and not v == f.value:
-                return False
-            if isinstance(f, GreaterThan) and not v > f.value:
-                return False
-            if isinstance(f, GreaterThanOrEqual) and not v >= f.value:
-                return False
-            if isinstance(f, LessThan) and not v < f.value:
-                return False
-            if isinstance(f, LessThanOrEqual) and not v <= f.value:
-                return False
-            if isinstance(f, In) and v not in f.value:
-                return False
-        return True
+    def _keep(self, idx: tuple) -> bool:
+        origin = dict(zip(_ORIGIN_COLS, (i * c for i, c in zip(idx, self.meta["chunks"]))))
+        return all(
+            _PRUNE[type(f)](origin[f.attribute[0]], getattr(f, "value", None))
+            for f in self._pushed
+        )
 
     def partitions(self) -> Sequence[InputPartition]:
-        ct, cb, cy, cx = self.meta["chunks"]
-        keep = []
-        for name in sorted(os.listdir(self.path)):
-            if not _CHUNK_NAME_RE.match(name):
-                continue
-            ti, bi, yi, xi = map(int, name.split("."))
-            origin = {"t": ti * ct, "b0": bi * cb, "y0": yi * cy, "x0": xi * cx}
-            if self._origin_ok(origin):
-                keep.append(os.path.join(self.path, name))
-        if not keep:
-            return [_ChunkBatch([])]
-        return [
-            _ChunkBatch(keep[i : i + _FILES_PER_TASK])
-            for i in range(0, len(keep), _FILES_PER_TASK)
+        keep = [idx for idx in chunk_files(self.path) if self._keep(idx)]
+        per = max(1, -(-len(keep) // (os.cpu_count() or 1)))
+        return [_ChunkBatch(keep[i : i + per]) for i in range(0, len(keep), per)] or [
+            _ChunkBatch([])
         ]
 
     def read(self, partition: _ChunkBatch):
-        import pyarrow as pa
-
-        rows = [
-            _decode_chunk(
-                os.path.dirname(fpath), os.path.basename(fpath), self.meta
-            )
-            for fpath in partition.files
-        ]
-        yield pa.record_batch(
-            {
-                "t": pa.array([r[0] for r in rows], pa.int32()),
-                "b0": pa.array([r[1] for r in rows], pa.int32()),
-                "y0": pa.array([r[2] for r in rows], pa.int32()),
-                "x0": pa.array([r[3] for r in rows], pa.int32()),
-                "shape": pa.array([r[4] for r in rows], pa.list_(pa.int32())),
-                "payload": pa.array(
-                    [r[5] for r in rows], pa.list_(pa.float32())
-                ),
-            }
-        )
+        chunks = partition.chunks
+        for i in range(0, max(1, len(chunks)), _CHUNKS_PER_BATCH):
+            yield _scan_batch(self.path, self.meta, chunks[i : i + _CHUNKS_PER_BATCH])
 
 
 @dataclass
@@ -167,76 +166,17 @@ class ChunkStoreWriter(DataSourceWriter):
 
     def __init__(self, options):
         self.path = options["path"]
-        self.meta = _read_meta(self.path)
+        self.meta = read_template(self.path)
 
     def write(self, rows) -> _WroteChunks:
-        import numpy as np
-
-        meta = self.meta
-        ct, cb, cy, cx = meta["chunks"]
-        comp = meta.get("compressor")
-        fill = (
-            math.nan
-            if meta["fill_value"] in ("NaN", None)
-            else float(meta["fill_value"])
-        )
-        n = 0
-        for row in rows:
-            nb, ny, nx = row.shape
-            block = np.asarray(row.payload, dtype=meta["dtype"]).reshape(nb, ny, nx)
-            t, b0, y0, x0 = int(row.t), int(row.b0), int(row.y0), int(row.x0)
-            assert t % ct == 0 and b0 % cb == 0 and y0 % cy == 0 and x0 % cx == 0
-            for byi in range(0, ny, cy):
-                for bxi in range(0, nx, cx):
-                    for bbi in range(0, nb, cb):
-                        cidx = (t // ct, (b0 + bbi) // cb, (y0 + byi) // cy, (x0 + bxi) // cx)
-                        chunk = np.full((cb, cy, cx), fill, dtype=meta["dtype"])
-                        sub = block[bbi : bbi + cb, byi : byi + cy, bxi : bxi + cx]
-                        chunk[: sub.shape[0], : sub.shape[1], : sub.shape[2]] = sub
-                        from flytemosaic_spark.sources.codecs import (
-                            compress_chunk,
-                        )
-
-                        payload = compress_chunk(
-                            chunk.tobytes(order="C"), comp
-                        )
-                        fname = os.path.join(self.path, ".".join(map(str, cidx)))
-                        tmp = f"{fname}.tmp-{os.getpid()}"
-                        with open(tmp, "wb") as f:
-                            f.write(payload)
-                        os.replace(tmp, fname)
-                        n += 1
-        return _WroteChunks(n)
+        return _WroteChunks(sum(write_region(self.path, self.meta, row) for row in rows))
 
     def commit(self, messages):
         return None
 
     def abort(self, messages):
-        # partial chunk files are overwritten by the retry (idempotent)
+        # partial chunk files are replaced by the retry (idempotent)
         return None
-
-
-def _decode_chunk(path: str, fname: str, meta: dict) -> tuple:
-    """(t, b0, y0, x0, shape, payload) for one ``t.b.y.x`` chunk file —
-    shared by the batch partition reader and the stream reader."""
-    import numpy as np
-
-    from flytemosaic_spark.sources.codecs import decompress_chunk
-
-    ct, cb, cy, cx = meta["chunks"]
-    ti, bi, yi, xi = map(int, fname.split("."))
-    with open(os.path.join(path, fname), "rb") as fh:
-        raw = fh.read()
-    raw = decompress_chunk(raw, meta.get("compressor"))
-    arr = np.frombuffer(raw, dtype=meta["dtype"]).astype("f4")
-    return (
-        ti * ct,
-        bi * cb,
-        yi * cy,
-        xi * cx,
-        [cb, cy, cx],
-        arr.tolist(),
-    )
 
 
 class ChunkStoreStreamReader(SimpleDataSourceStreamReader):
@@ -257,12 +197,14 @@ class ChunkStoreStreamReader(SimpleDataSourceStreamReader):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("chunkstore stream requires option 'path'")
-        self.meta = _read_meta(self.path)
+        self.meta = read_template(self.path)
 
     def _chunk_files(self) -> list[str]:
-        return sorted(
-            n for n in os.listdir(self.path) if _CHUNK_NAME_RE.match(n)
-        )
+        return [chunk_name(idx) for idx in chunk_files(self.path)]
+
+    def _rows(self, names: list[str]) -> Iterator[tuple]:
+        batch = _scan_batch(self.path, self.meta, [chunk_index(n) for n in names])
+        return zip(*(col.to_pylist() for col in batch.columns))
 
     def initialOffset(self) -> dict:
         return {"seen": {}}
@@ -270,15 +212,12 @@ class ChunkStoreStreamReader(SimpleDataSourceStreamReader):
     def read(self, start: dict):
         seen = dict(start.get("seen", {}))
         new = [n for n in self._chunk_files() if n not in seen]
-        rows = [_decode_chunk(self.path, n, self.meta) for n in new]
-        for n in new:
-            seen[n] = 1
-        return iter(rows), {"seen": seen}
+        seen.update(dict.fromkeys(new, 1))
+        return self._rows(new), {"seen": seen}
 
     def readBetweenOffsets(self, start: dict, end: dict):
         prev = start.get("seen", {})
-        names = [n for n in end.get("seen", {}) if n not in prev]
-        return iter(_decode_chunk(self.path, n, self.meta) for n in names)
+        return self._rows([n for n in end.get("seen", {}) if n not in prev])
 
 
 class ChunkStoreDataSource(DataSource):
@@ -303,5 +242,7 @@ class ChunkStoreDataSource(DataSource):
 
 
 def register(spark) -> None:
+    """Make ``format("chunkstore")`` available in ``spark``. Pushdown
+    must be on: the reader consumes filters."""
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(ChunkStoreDataSource)

@@ -1,8 +1,8 @@
 """Chunk-payload codec registry — numcodecs-compatible ids.
 
-The chunk stores (``sources/chunkstore.py`` / ``chunkstore_v2.py``)
-declare their compressor in ``.zarray`` exactly like Zarr v2 /
-numcodecs: ``None`` (raw), ``{"id": "zlib", "level": n}``,
+The chunk store declares its compressor in ``.zarray`` exactly like
+Zarr v2 / numcodecs, and ``sources/chunkstore.py:read_chunk`` /
+``write_chunk`` are the store's only callers of this registry: ``None`` (raw), ``{"id": "zlib", "level": n}``,
 ``{"id": "lz4"}`` (4-byte LE size prefix + LZ4 block — the numcodecs
 wire format, real-world Zarr's most common codec family), or
 ``{"id": "zstd", "level": n}`` (one zstd frame; encode through

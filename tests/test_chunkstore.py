@@ -110,7 +110,8 @@ def test_read_store_scan(spark, tmp_path):
     write_region_chunks(df, path)
 
     scan = read_store(spark, path)
-    # manifest filter prunes chunk reads: only time slice 1
+    # the filter is pushed into the scan's chunk listing: only the
+    # time-slice-1 chunks are decoded
     sub = scan.where("t = 1").toPandas()
     assert (sub["t"] == 1).all()
     # reassemble t=1 and compare (edge chunks are fill-padded)
@@ -197,3 +198,40 @@ def test_store_roundtrip_property_random_shapes(spark):
             np.testing.assert_array_equal(read_array(path), cube)
 
     run()
+
+
+def test_chunk_writes_use_unique_temp_names(tmp_path, monkeypatch):
+    """Two attempts at the same chunk (a task retry, a second host)
+    stage their bytes under distinct temp names, and neither a
+    finished nor a failed write leaves a temp file behind."""
+    import os
+
+    from flytemosaic_spark.sources.chunkstore import chunk_files, write_chunk
+
+    path = str(tmp_path / "store")
+    write_template(path, SHAPE, CHUNKS)
+    meta = read_template(path)
+    chunk = np.zeros(CHUNKS, "f4")
+    real_replace, staged = os.replace, []
+
+    def recording_replace(src, dst):
+        staged.append(src)
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", recording_replace)
+    write_chunk(path, meta, (0, 0, 1, 2), chunk)
+    write_chunk(path, meta, (0, 0, 1, 2), chunk + 1)
+    assert len(staged) == 2 and staged[0] != staged[1]
+    assert all(os.path.basename(s).startswith("0.0.1.2.tmp-") for s in staged)
+
+    def failing_replace(src, dst):
+        raise OSError("injected")
+
+    monkeypatch.setattr(os, "replace", failing_replace)
+    try:
+        write_chunk(path, meta, (1, 0, 0, 0), chunk)
+    except OSError:
+        pass
+    assert sorted(n for n in os.listdir(path) if not n.startswith(".")) == ["0.0.1.2"]
+    assert chunk_files(path) == [(0, 0, 1, 2)]
+    np.testing.assert_array_equal(read_array(path)[0, :, 16:32, 32:48], chunk[0] + 1)

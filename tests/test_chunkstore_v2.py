@@ -10,7 +10,10 @@ import pytest
 
 from flytemosaic_spark.plans.partitioner import plan_partitions
 from flytemosaic_spark.sources.chunkstore import (
+    chunk_files,
+    chunk_name,
     read_array,
+    read_store,
     write_region_chunks,
     write_template,
 )
@@ -166,3 +169,59 @@ def test_in_flight_tmp_files_are_invisible(spark, tmp_path):
     assert all(".tmp-" not in name for name in r._chunk_files())
     rows, off = r.read(r.initialOffset())
     assert len(list(rows)) == n
+
+
+def test_read_store_decodes_only_pushed_chunks(spark, tmp_path):
+    """`read_store` plans from chunk names: a filter on t/b0/y0/x0 is
+    pushed into the listing and pruned chunks are never opened. Every
+    chunk outside the filter is overwritten with undecodable bytes, so
+    the number of non-matching chunks the scan decodes must be zero —
+    one decode would raise."""
+    import shutil
+
+    path, cube, df = _store(spark, tmp_path)
+    write_region_chunks(df, path)
+    cols = ("t", "b0", "y0", "x0")
+    cases = {
+        "t = 1": lambda o: o["t"] == 1,
+        "b0 = 0 AND y0 >= 16": lambda o: o["b0"] == 0 and o["y0"] >= 16,
+        "x0 IN (0, 32)": lambda o: o["x0"] in (0, 32),
+        "t = 0 AND y0 = 16 AND x0 = 32": lambda o: (o["t"], o["y0"], o["x0"]) == (0, 16, 32),
+    }
+    for k, (where, keep) in enumerate(cases.items()):
+        copy = str(tmp_path / f"pruned{k}")
+        shutil.copytree(path, copy)
+        want = set()
+        for idx in chunk_files(copy):
+            origin = dict(zip(cols, np.multiply(idx, CHUNKS).tolist()))
+            if keep(origin):
+                want.add(tuple(origin.values()))
+            else:
+                with open(os.path.join(copy, chunk_name(idx)), "wb") as f:
+                    f.write(b"not a chunk")
+        rows = read_store(spark, copy).where(where).collect()
+        assert {(r.t, r.b0, r.y0, r.x0) for r in rows} == want, where
+        for r in rows:
+            block = np.asarray(r.payload, "f4").reshape(r.shape)
+            ys, xs = min(r.shape[1], SHAPE[2] - r.y0), min(r.shape[2], SHAPE[3] - r.x0)
+            np.testing.assert_array_equal(
+                block[:, :ys, :xs], cube[r.t, :, r.y0 : r.y0 + ys, r.x0 : r.x0 + xs]
+            )
+    # the corruption is real: an unfiltered scan of the last copy fails
+    with pytest.raises(Exception, match="cannot reshape|buffer size"):
+        read_store(spark, copy).collect()
+
+
+def test_reused_read_store_plans_every_query(spark, tmp_path):
+    """Spark keeps a relation's last pushdown result; a query on the
+    same `read_store` DataFrame that filters on no origin column must
+    still list every chunk, not the previous query's pruned list."""
+    path, cube, df = _store(spark, tmp_path)
+    write_region_chunks(df, path)
+    scan = read_store(spark, path)
+    n = len(chunk_files(path))
+    assert scan.where("t = 1").count() == n // 2
+    assert scan.count() == n
+    assert scan.where("x0 = 0").count() == n // 4
+    assert scan.where("shape[0] = 3").count() == n
+    assert read_store(spark, path).count() == n

@@ -6,6 +6,8 @@ scene source, bit-comparable at float32."""
 from __future__ import annotations
 
 import datetime as dt
+import os
+import shutil
 
 import numpy as np
 import pytest
@@ -14,10 +16,16 @@ from flytemosaic_spark.fixtures import tile_grid
 from flytemosaic_spark.operators.raster import QA_CLEAR
 from flytemosaic_spark.pipeline import (
     build_mosaic,
+    export_feature_geotiffs,
     synthetic_scene,
     target_scene_periods,
 )
-from flytemosaic_spark.sources.chunkstore import read_array
+from flytemosaic_spark.sources.chunkstore import (
+    chunk_files,
+    chunk_name,
+    read_array,
+    read_store,
+)
 
 N_BANDS, TILE_PX = 4, 16
 BBOX = (0.2, 0.2, 2.8, 1.8)  # x tiles {0,1,2} x y tiles {0,1} = 6 tiles
@@ -128,3 +136,65 @@ def test_mosaic_skip_existing(spark, tmp_path):
                      n_bands=N_BANDS, tile_px=TILE_PX, skip_existing=True)
     assert b["n_chunks_written"] == 0
     np.testing.assert_array_equal(read_array(store), before)
+
+
+SMALL_BBOX = (0, 0, 2, 1)  # 2 tiles; with TIMES, 4 chunks
+
+
+@pytest.fixture(scope="module")
+def small_store(spark, tmp_path_factory):
+    """One clean build of the small 2-tile x 2-time layout; tests copy
+    it instead of rebuilding."""
+    store = str(tmp_path_factory.mktemp("small") / "mosaic")
+    build_mosaic(spark, tile_grid(spark, n=4), SMALL_BBOX, TIMES, store,
+                 n_bands=N_BANDS, tile_px=TILE_PX)
+    return store, read_array(store).copy()
+
+
+def _plant_leftover_temp(store):
+    """What a writer killed between write and rename leaves behind."""
+    with open(os.path.join(store, "0.0.0.0.tmp-123"), "wb") as f:
+        f.write(b"partial")
+
+
+def test_leftover_temp_file_is_invisible(spark, tmp_path, small_store):
+    """Every store reader lists chunks through one name rule, so a
+    killed writer's temp file breaks none of them (it used to raise
+    ValueError parsing 'tmp-123' as an int)."""
+    clean_store, clean = small_store
+    store = str(tmp_path / "mosaic")
+    shutil.copytree(clean_store, store)
+
+    _plant_leftover_temp(store)
+    np.testing.assert_array_equal(read_array(store), clean)
+
+    _plant_leftover_temp(store)
+    assert read_store(spark, store).count() == 4
+
+    _plant_leftover_temp(store)
+    exported = export_feature_geotiffs(spark, store, str(tmp_path / "cogs")).collect()
+    assert len(exported) == 4 and all(r.ok for r in exported)
+
+    _plant_leftover_temp(store)
+    b = build_mosaic(spark, tile_grid(spark, n=4), SMALL_BBOX, TIMES, store,
+                     n_bands=N_BANDS, tile_px=TILE_PX, skip_existing=True)
+    assert b["n_chunks_written"] == 0
+    np.testing.assert_array_equal(read_array(store), clean)
+
+
+def test_partial_store_rerun_equals_clean_build(spark, tmp_path, small_store):
+    """The rerun-after-crash path: half the chunks gone and a leftover
+    temp file; skip_existing rebuilds exactly the missing chunks and
+    the store reads back equal to a clean build."""
+    clean_store, clean = small_store
+    store = str(tmp_path / "mosaic")
+    shutil.copytree(clean_store, store)
+    for idx in chunk_files(store)[::2]:
+        os.remove(os.path.join(store, chunk_name(idx)))
+    _plant_leftover_temp(store)
+
+    b = build_mosaic(spark, tile_grid(spark, n=4), SMALL_BBOX, TIMES, store,
+                     n_bands=N_BANDS, tile_px=TILE_PX, skip_existing=True)
+    assert b["n_chunks_written"] == 2
+    assert len(chunk_files(store)) == 4
+    np.testing.assert_array_equal(read_array(store), clean)

@@ -1,20 +1,9 @@
-"""Salted aggregation/join equivalence, the SQL frontend, and the
-mosaic-manifest builder (S7) with group-homogeneity validation."""
+"""Salted aggregation/join equivalence and the SQL frontend."""
 
 from __future__ import annotations
 
-import datetime as dt
-
-import pytest
 from pyspark.sql import functions as F
 
-from flytemosaic_spark.fixtures import tile_grid
-from flytemosaic_spark.operators.catalog import feature_targets
-from flytemosaic_spark.operators.manifest import (
-    assert_homogeneous,
-    build_manifest,
-    validate_groups,
-)
 from flytemosaic_spark.operators.skew import salted_agg, salted_join
 from flytemosaic_spark.sql import sql
 
@@ -72,39 +61,3 @@ def test_sql_frontend(spark, sf_dir):
     )
     rows = df.collect()
     assert len(rows) == 5 and all(r.n > 0 for r in rows)
-
-
-@pytest.fixture()
-def manifest(spark):
-    tiles = tile_grid(spark, n=4)
-    feats = feature_targets(
-        spark, tiles, (0, 0, 3, 2), [dt.datetime(2020, 3, 1), dt.datetime(2021, 3, 1)]
-    ).join(tiles.select("tile_id", "minx", "miny", "maxx", "maxy"), "tile_id")
-    return build_manifest(feats)
-
-
-def test_manifest_schema_and_groups(spark, manifest):
-    from flytemosaic_spark.schemas import MOSAIC_MANIFEST
-
-    assert [f.name for f in manifest.schema.fields] == [
-        f.name for f in MOSAIC_MANIFEST.fields
-    ]
-    groups = assert_homogeneous(manifest)
-    rows = groups.collect()
-    assert len(rows) == 2  # 2 snapped years x 1 feature
-    for r in rows:
-        assert r.n_sources == 6  # 3x2 tiles
-        assert (r.minx, r.miny, r.maxx, r.maxy) == (0.0, 0.0, 3.0, 2.0)
-
-
-def test_manifest_mixed_metadata_raises(spark, manifest):
-    mixed = manifest.withColumn(
-        "dtype",
-        F.when(F.col("url").endswith("0301.tif"), F.lit("uint16")).otherwise(
-            F.col("dtype")
-        ),
-    )
-    bad = validate_groups(mixed).where(~F.col("homogeneous"))
-    if bad.count():  # url pattern matched -> must raise
-        with pytest.raises(ValueError, match="mixed raster metadata"):
-            assert_homogeneous(mixed)
