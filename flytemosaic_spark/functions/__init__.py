@@ -5,6 +5,7 @@ from flytemosaic_spark.functions.temporal import (
     clamp,
     date_to_period,
     period_to_date,
+    period_window,
     snap_to_year,
 )
 from flytemosaic_spark.functions.paths import (
@@ -21,6 +22,7 @@ __all__ = [
     "clamp",
     "date_to_period",
     "period_to_date",
+    "period_window",
     "snap_to_year",
     "path_join",
     "relative_to",

@@ -7,9 +7,15 @@ features to a yearly grid with clamped look-back windows
 (glad.py:210-234). All of it is expressible as pure Catalyst column
 expressions — no Python UDFs — so these functions stay inside
 whole-stage codegen and cost nothing at 100 TB scale.
+
+Planning a request needs the same grid for a handful of query times,
+so :func:`period_window` computes a time's clamped look-back window
+in plain Python on the driver.
 """
 
 from __future__ import annotations
+
+import datetime as dt
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -57,3 +63,26 @@ def snap_to_year(t: Column) -> Column:
 def clamp(t: Column, lo: Column, hi: Column) -> Column:
     """F9 — clamp into [lo, hi] via greatest/least (reference: glad.py:182-185)."""
     return F.least(F.greatest(t, lo), hi)
+
+
+def period_window(t: dt.datetime, window_days: int, latest: str) -> range:
+    """The periods covering ``[t - window_days, t]``, both ends clamped
+    to ``[EARLIEST_DATE, latest]`` (F9 then F6 per end; reference
+    glad.py:163-186,245-257).
+
+    Plain Python for driver-side planning: equal to
+    ``date_to_period(clamp(...))`` on a naive (UTC-session) timestamp.
+    """
+    lo_bound = dt.datetime.fromisoformat(EARLIEST_DATE)
+    hi_bound = dt.datetime.fromisoformat(latest)
+
+    def period(d: dt.datetime) -> int:
+        d = min(max(d, lo_bound), hi_bound)
+        day_delta = (d.date() - dt.date(d.year, 1, 1)).days
+        return (
+            PERIOD_BASE
+            + PERIODS_PER_YEAR * (d.year - PERIOD_EPOCH_YEAR)
+            + day_delta // PERIOD_DAYS
+        )
+
+    return range(period(t - dt.timedelta(days=window_days)), period(t) + 1)

@@ -7,11 +7,11 @@ grid, expanding each (tile, time) to its covering 16-day periods, and
 templating urls (reference: flyte/scenes.py:29-57 calling
 flytemosaic/datasets/glad.py:236-257). Here that is:
 
-    tiles ⋈_bbox query  ×  explode(sequence(periods))  ▷ url ▷ distinct
+    tiles ⋈_bbox query  ×  periods  ▷ url ▷ distinct
 
 All joins broadcast the small side (the real tile index is 19k rows);
-the period expansion is a generator, so there is nothing to prune —
-exactly the keys needed are produced (SURVEY §4).
+the periods are computed on the driver from the query times, so there
+is nothing to prune — exactly the keys needed are produced (SURVEY §4).
 """
 
 from __future__ import annotations
@@ -22,13 +22,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flytemosaic_spark.functions.temporal import (
-    clamp,
-    date_to_period,
     period_to_date,
+    period_window,
     snap_to_year,
 )
 
-EARLIEST = "1997-01-01"
 URL_TEMPLATE = "s3://scenes/%s/%s/%d.tif"  # feature / tile / period
 
 
@@ -84,8 +82,14 @@ def required_scenes(
     - snap request times to the yearly grid and dedupe (F8, A2)
     - spatial prune tiles (J1, broadcast — the tile subset is small)
     - per snapped time: periods covering [t − window, t] clamped to
-      [EARLIEST, latest] (J7/F6/F9; reference glad.py:163-186,245-257)
+      [EARLIEST_DATE, latest] (J7/F6/F9; reference
+      glad.py:163-186,245-257)
     - template urls (F3/F5, glad.py:25) and distinct (A2)
+
+    The snapped times and their period windows are a handful of
+    literals, so they are computed on the driver
+    (``temporal.period_window``); only the tile prune and the url
+    expansion run in Spark.
 
     ``latest`` is a *pinned* plan-time bound — the reference's
     ``now() − 14d`` (glad.py:213-215) made plans non-reproducible;
@@ -97,10 +101,9 @@ def required_scenes(
     tile index's CRS (functions/crs.py column-free math), so the prune
     and the exact refine run unchanged and pushdown survives.
     """
-    times_df = (
-        spark.createDataFrame([(t,) for t in times], "t timestamp")
-        .select(snap_to_year(F.col("t")).alias("time"))
-        .distinct()
+    snapped = {dt.datetime(t.year, 1, 1) for t in times}
+    periods = sorted(
+        set().union(*(period_window(t, window_days, latest) for t in snapped))
     )
     tiles = tiles_for_bbox(tile_index, bbox, query_crs, index_crs).select(
         "tile_id", "minx", "miny", "maxx", "maxy"
@@ -115,22 +118,9 @@ def required_scenes(
             query_wkb = reproject_wkb(query_wkb, query_crs, index_crs)
         tiles = refine_intersects(tiles, query_wkb)
 
-    lo = date_to_period(
-        clamp(
-            F.col("time") - F.expr(f"INTERVAL {window_days} DAYS"),
-            F.lit(EARLIEST).cast("timestamp"),
-            F.lit(latest).cast("timestamp"),
-        )
-    )
-    hi = date_to_period(
-        clamp(F.col("time"), F.lit(EARLIEST).cast("timestamp"), F.lit(latest).cast("timestamp"))
-    )
-    periods = times_df.select(
-        "time", F.explode(F.sequence(lo, hi)).alias("period")
-    )
-
     scenes = (
-        periods.crossJoin(F.broadcast(tiles))
+        spark.createDataFrame([(p,) for p in periods], "period bigint")
+        .crossJoin(F.broadcast(tiles))
         .select(
             period_to_date(F.col("period")).cast("timestamp").alias("datetime"),
             F.format_string(

@@ -2,25 +2,28 @@
 (`build_dataset_mosaic_workflow`, reference flyte/build.py:179-228)
 as ONE Spark job instead of a Flyte task DAG.
 
-Stages (SURVEY §3.1, boundaries become shuffles instead of pods):
+Stages (SURVEY §3.1):
 
-1. catalog planning — (bbox, times) → (tile, snapped-time) targets and
-   their covering scene periods (reference flyte/scenes.py:29-57);
-   pure column expressions, broadcast joins. Incremental skip (J4)
-   anti-joins the store listing.
-2. fused build — ``groupBy(tile, time).applyInPandas`` where each task
-   loads its scene stack (the synthetic source stands in for a COG
-   reader — same array contract, reference utils.py:99-151), runs the
+1. catalog planning, on the driver — (bbox, times) → (tile,
+   snapped-time) targets and their covering scene periods (reference
+   flyte/scenes.py:29-57 plans the same layout in GeoPandas on one
+   pod). One collect of the bbox-pruned tile index; everything else
+   is plain Python. Incremental skip (J4) is a set difference against
+   the store listing.
+2. fused build — one ``mapInPandas`` over the manifest (one row per
+   output chunk, its scene periods inside the row): each row loads
+   its scene stack (the synthetic source stands in for a COG reader —
+   same array contract, reference utils.py:99-151), runs the
    QA-masked mean/median composite (glad.py:259-282), and writes its
    disjoint store chunk (S10) — all inside one Python worker.
 
-The ONLY shuffle moves metadata-scale manifest rows (tile, time,
-period); pixel payloads never cross the Python/JVM boundary. This is
-the reference's exact task granularity (one pod builds one (tile,
-date) feature COG, scenes.py:235-249) and is what makes the design
-hold at 100 TB: a staged formulation that shuffles payloads pays
-Arrow + UnsafeRow serialization on every hop and caps out at tens of
-MB/s per node; the fused kernel runs at memory bandwidth.
+Nothing shuffles: manifest rows are distinct by construction, and
+pixel payloads never cross the Python/JVM boundary. This is the
+reference's exact task granularity (one pod builds one (tile, date)
+feature COG, scenes.py:235-249) and is what makes the design hold at
+100 TB: a staged formulation that shuffles payloads pays Arrow +
+UnsafeRow serialization on every hop and caps out at tens of MB/s per
+node; the fused kernel runs at memory bandwidth.
 """
 
 from __future__ import annotations
@@ -32,10 +35,9 @@ import zlib
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from flytemosaic_spark.functions.temporal import clamp, date_to_period
-from flytemosaic_spark.operators.catalog import EARLIEST, feature_targets
+from flytemosaic_spark.functions.temporal import period_window
+from flytemosaic_spark.operators.catalog import tiles_for_bbox
 from flytemosaic_spark.operators.raster import QA_CLEAR
 from flytemosaic_spark.sources.chunkstore import (
     chunk_files,
@@ -57,6 +59,28 @@ def synthetic_scene(tile_id: str, period: int, n_bands: int, size: int) -> np.nd
     return arr
 
 
+def plan_targets(
+    tile_index: DataFrame,
+    bbox: tuple[float, float, float, float],
+    times: list[dt.datetime],
+    window_days: int = 365,
+    latest: str = "2026-01-01",
+) -> tuple[list[tuple[str, float, float]], list[dt.datetime], list[range]]:
+    """Stage 1 on the driver — the sorted ``(tile_id, minx, miny)`` of
+    every tile overlapping ``bbox``, the sorted snapped times (naive
+    year starts) and each time's scene-period window.
+
+    Costs one collect of the pruned tile index (none without times);
+    the rest is Python over a handful of literals. The reference's
+    real index is 19k tiles, so the layout and the build manifest
+    (tiles × times) are tens of thousands of rows at most."""
+    snapped = sorted({dt.datetime(t.year, 1, 1) for t in times})
+    windows = [period_window(t, window_days, latest) for t in snapped]
+    pruned = tiles_for_bbox(tile_index, bbox).select("tile_id", "minx", "miny")
+    tiles = sorted(tuple(r) for r in pruned.collect()) if snapped else []
+    return tiles, snapped, windows
+
+
 def target_scene_periods(
     spark: SparkSession,
     tile_index: DataFrame,
@@ -65,25 +89,18 @@ def target_scene_periods(
     window_days: int = 365,
     latest: str = "2026-01-01",
 ) -> DataFrame:
-    """Stage 1 — (tile_id, time, period) for every scene feeding every
-    (tile, snapped-time) composite target (J6 cross + J7 expansion)."""
-    targets = feature_targets(spark, tile_index, bbox, times).select("tile_id", "time")
-    lo = date_to_period(
-        clamp(
-            F.col("time") - F.expr(f"INTERVAL {window_days} DAYS"),
-            F.lit(EARLIEST).cast("timestamp"),
-            F.lit(latest).cast("timestamp"),
-        )
-    )
-    hi = date_to_period(
-        clamp(
-            F.col("time"),
-            F.lit(EARLIEST).cast("timestamp"),
-            F.lit(latest).cast("timestamp"),
-        )
-    )
-    return targets.select(
-        "tile_id", "time", F.explode(F.sequence(lo, hi)).alias("period")
+    """Stage 1 as a frame — (tile_id, time, period) for every scene
+    feeding every (tile, snapped-time) composite target (J6 cross + J7
+    expansion), from the driver plan :func:`build_mosaic` runs."""
+    tiles, snapped, windows = plan_targets(tile_index, bbox, times, window_days, latest)
+    return spark.createDataFrame(
+        [
+            (tid, t, p)
+            for tid, _, _ in tiles
+            for t, window in zip(snapped, windows)
+            for p in window
+        ],
+        "tile_id string, time timestamp, period bigint",
     )
 
 
@@ -103,6 +120,16 @@ def build_mosaic(
 ) -> dict:
     """Run the full §3.1 lifecycle into ``store_path``. Returns the
     store layout (shape/chunks/tile origins/time order) for readers.
+
+    Planning runs on the driver (:func:`plan_targets`): one collect of
+    the bbox-pruned tile index, then plain Python builds a manifest
+    with one row per output chunk, ``(tile_id, t, yi, xi, periods)``,
+    and drops the chunks ``skip_existing`` finds in the store. The
+    driver-side bound is the tile count: the reference's real index
+    has 19k tiles, so its manifest is tens of thousands of rows. The
+    kernel then runs as ONE ``mapInPandas`` job over the manifest (the
+    local relation's default slicing: one partition per core), and the
+    driver sums its per-batch chunk counts. No stage shuffles.
 
     ``scene_reader`` is the COG seam made injectable: a callable
     ``(tile_id, period, n_bands, tile_px) -> np.ndarray`` run INSIDE
@@ -132,30 +159,15 @@ def build_mosaic(
             f"tile_px={tile_px} not divisible by resample_factor={resample_factor}"
         )
     out_px = tile_px // resample_factor
-    scene_periods = target_scene_periods(
-        spark, tile_index, bbox, times, window_days=window_days
-    )
+    tiles, t_order, windows = plan_targets(tile_index, bbox, times, window_days)
 
     # deterministic global layout (driver-side metadata, tiny)
-    tiles = sorted(
-        (r.tile_id, r.minx, r.miny)
-        for r in tile_index.join(
-            scene_periods.select("tile_id").distinct(), "tile_id", "left_semi"
-        )
-        .select("tile_id", "minx", "miny")
-        .collect()
-    )
     xs = sorted({t[1] for t in tiles})
     ys = sorted({t[2] for t in tiles})
     origin = {
         tid: (ys.index(miny) * out_px, xs.index(minx) * out_px)
         for tid, minx, miny in tiles
     }
-    t_order = [
-        r.time
-        for r in scene_periods.select("time").distinct().orderBy("time").collect()
-    ]
-    t_index = {t: i for i, t in enumerate(t_order)}
 
     shape = (len(t_order), n_bands - 1, len(ys) * out_px, len(xs) * out_px)
     chunks = (1, n_bands - 1, out_px, out_px)
@@ -174,55 +186,30 @@ def build_mosaic(
     # Incremental skip (J4): drop targets whose chunk already exists in
     # the store — the reference's rerun-and-skip core (scenes.py:219-232)
     # applied at the mosaic layer. The listing is metadata-scale.
-    if skip_existing:
-        existing = chunk_files(store_path)
-        if existing:
-            done = spark.createDataFrame(
-                [(t, y * out_px, x * out_px) for t, _, y, x in existing],
-                "t int, oy int, ox int",
-            )
-            done_targets = (
-                done.join(
-                    F.broadcast(
-                        spark.createDataFrame(
-                            [
-                                (tid, y0, x0, t_index[t])
-                                for tid, (y0, x0) in origin.items()
-                                for t in t_order
-                            ],
-                            "tile_id string, oy int, ox int, t int",
-                        )
-                    ),
-                    ["t", "oy", "ox"],
-                )
-                .select("tile_id", F.lit(True).alias("_done"), "t")
-            )
-            time_lookup = spark.createDataFrame(
-                [(t, i) for t, i in t_index.items()], "time timestamp, t int"
-            )
-            scene_periods = (
-                scene_periods.join(F.broadcast(time_lookup), "time")
-                .join(done_targets, ["tile_id", "t"], "left_anti")
-                .drop("t")
-            )
+    done = (
+        {(t, yi, xi) for t, _, yi, xi in chunk_files(store_path)}
+        if skip_existing
+        else set()
+    )
+    manifest = [
+        (tid, t, y0 // out_px, x0 // out_px, list(window))
+        for tid, (y0, x0) in origin.items()
+        for t, window in enumerate(windows)
+        if (t, y0 // out_px, x0 // out_px) not in done
+    ]
 
-    # Stages 2-5, FUSED — one grouped-map task per (tile, time) loads
-    # its scenes, composites, and writes its disjoint store chunk, all
-    # inside the Python worker. Only the metadata-scale manifest rows
-    # (tile, time, period) ever shuffle; pixel payloads NEVER cross the
-    # Python/JVM boundary. This is the reference's exact task shape
+    # Stages 2-5, FUSED — each manifest row loads its scenes,
+    # composites, and writes its disjoint store chunk, all inside the
+    # Python worker; pixel payloads NEVER cross the Python/JVM
+    # boundary. This is the reference's exact task shape
     # (build_tile_date_feature_cog_task loads scenes and writes the COG
     # inside the task, flyte/scenes.py:235-249, protocols.py:298-316)
     # and the difference between ~0.02 and ~1 GiB/s per node: a staged
     # formulation pays Arrow/UnsafeRow serialization on every hop.
     meta = read_template(store_path)
-    stats_schema = "tile_id string, time timestamp, n_chunks int"
-
     reader = scene_reader or synthetic_scene
 
-    def load_composite_write(pdf: pd.DataFrame) -> pd.DataFrame:
-        tile = pdf["tile_id"].iloc[0]
-        time = pdf["time"].iloc[0]
+    def load_composite(tile: str, periods) -> np.ndarray:
         if reducer == "mean":
             # streaming accumulation: one scene resident at a time, so
             # peak memory is (1 scene + 2 accumulators) instead of the
@@ -232,7 +219,7 @@ def build_mosaic(
             # zarr for the same reason, utils.py:128-131 / D7)
             acc = np.zeros((n_bands - 1, tile_px, tile_px), "f8")
             cnt = np.zeros((tile_px, tile_px), "i4")
-            for p in pdf["period"]:
+            for p in periods:
                 s = reader(tile, int(p), n_bands, tile_px)
                 ok = s[n_bands - 1] == QA_CLEAR
                 np.add(acc, s[: n_bands - 1], out=acc, where=ok[None, :, :])
@@ -242,10 +229,7 @@ def build_mosaic(
             comp[:, cnt == 0] = np.nan
         else:
             stack = np.stack(
-                [
-                    reader(tile, int(p), n_bands, tile_px)
-                    for p in pdf["period"]
-                ]
+                [reader(tile, int(p), n_bands, tile_px) for p in periods]
             )
             qa = stack[:, n_bands - 1 : n_bands]
             vals = np.where(qa == QA_CLEAR, stack[:, : n_bands - 1], np.nan)
@@ -259,19 +243,25 @@ def build_mosaic(
             blocks = comp.reshape(n_bands - 1, out_px, fctr, out_px, fctr)
             with np.errstate(invalid="ignore"):
                 comp = np.nanmean(blocks, axis=(2, 4)).astype("f4")
-        # S10 region write, task-local: (t, 0, y0, x0) is chunk-aligned
-        # by construction (chunk == one tile slab)
-        y0, x0 = origin[tile]
-        ti = t_index[pd.Timestamp(time).to_pydatetime()]
-        write_chunk(store_path, meta, (ti, 0, y0 // out_px, x0 // out_px), comp)
-        return pd.DataFrame(
-            {"tile_id": [tile], "time": [time], "n_chunks": [1]}
-        )
+        return comp
 
-    stats = scene_periods.groupBy("tile_id", "time").applyInPandas(
-        load_composite_write, stats_schema
-    )
-    n_chunks = int(stats.agg(F.sum("n_chunks")).first()[0] or 0)
+    def load_composite_write(batches):
+        for pdf in batches:
+            for tile, t, yi, xi, periods in zip(
+                pdf["tile_id"], pdf["t"], pdf["yi"], pdf["xi"], pdf["periods"]
+            ):
+                # S10 region write, task-local: (t, 0, yi, xi) is
+                # chunk-aligned by construction (chunk == one tile slab)
+                comp = load_composite(tile, periods)
+                write_chunk(store_path, meta, (int(t), 0, int(yi), int(xi)), comp)
+            yield pd.DataFrame({"n_chunks": [len(pdf)]})
+
+    n_chunks = 0
+    if manifest:
+        counts = spark.createDataFrame(
+            manifest, "tile_id string, t int, yi int, xi int, periods array<int>"
+        ).mapInPandas(load_composite_write, "n_chunks long")
+        n_chunks = sum(r.n_chunks for r in counts.collect())
     return {
         "path": store_path,
         "shape": shape,

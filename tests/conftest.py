@@ -31,7 +31,6 @@ _SLOW = {
     ("test_edge_cases.py", "test_grid_bbox_join_equals_naive_theta_join"),
     ("test_dedup.py", "test_star_components_match_unionfind"),
     ("test_source_robustness.py", "test_binaryfile_ingest_explodes_all_samples"),
-    ("test_pipeline.py", "test_mosaic_skip_existing"),
     ("test_streaming.py", "test_throttle_dedup_stream_matches_batch"),
     ("test_partitioner.py", "test_exactly_once_coverage_property"),
     ("test_similarity.py", "test_ivf_pq_recall_vs_brute_force"),
@@ -49,11 +48,8 @@ _SLOW = {
     ("test_similarity.py", "test_approx_results_are_subsets_of_corpus"),
     ("test_similarity.py", "test_pq_index_upsert_equals_fixed_codebook_rebuild"),
     ("test_edge_cases.py", "test_spearman_degenerate_inputs"),
-    ("test_pipeline.py", "test_mosaic_resample_matches_numpy_oracle"),
     ("test_chunkstore.py", "test_store_roundtrip_property_random_shapes"),
     ("test_streaming.py", "test_cusum_stream_matches_batch"),
-    ("test_pipeline.py", "test_mosaic_matches_numpy_oracle"),
-    ("test_pipeline.py", "test_mosaic_rerun_is_idempotent"),
     ("test_streaming.py", "test_enrich_stream_static_join_matches_batch_and_sees_dim_refresh"),
     ("test_roundten.py", "test_moves_toward_quantile"),
     ("test_streaming.py", "test_windowed_counts_stream_matches_batch"),

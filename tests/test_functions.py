@@ -15,6 +15,7 @@ from flytemosaic_spark.functions.temporal import (
     clamp,
     date_to_period,
     period_to_date,
+    period_window,
     snap_to_year,
 )
 
@@ -65,3 +66,25 @@ def test_snap_and_clamp(spark):
     assert row.y == dt.datetime(2020, 1, 1)
     assert row.lo == dt.datetime(2020, 7, 20)
     assert row.hi == dt.datetime(2020, 6, 30)
+
+
+def test_period_window_matches_column_expression(spark):
+    """The driver-side window equals date_to_period(clamp(...)) per end
+    over a date sweep with leap days, dates before EARLIEST_DATE and
+    dates after ``latest``."""
+    latest = "2026-01-01"
+    days = [dt.date(1994, 6, 1) + dt.timedelta(days=5 * i) for i in range(2500)]
+    days += [dt.date(y, 2, 29) for y in (2000, 2004, 2020, 2024)]
+    days += [dt.date(y, 12, 31) for y in (1996, 2000, 2020, 2025, 2026)]
+    rows = [(d.isoformat(), w) for d in days for w in (0, 16, 365, 3650)]
+    lo_b, hi_b = F.lit("1997-01-01").cast("timestamp"), F.lit(latest).cast("timestamp")
+    t = F.col("s").cast("timestamp")
+    got = spark.createDataFrame(rows, "s string, w int").select(
+        "s",
+        "w",
+        date_to_period(clamp(t - F.make_dt_interval(F.col("w")), lo_b, hi_b)).alias("lo"),
+        date_to_period(clamp(t, lo_b, hi_b)).alias("hi"),
+    )
+    for r in got.collect():
+        window = period_window(dt.datetime.fromisoformat(r.s), r.w, latest)
+        assert (window.start, window.stop - 1) == (r.lo, r.hi), (r.s, r.w)

@@ -8,6 +8,9 @@ from __future__ import annotations
 import datetime as dt
 import os
 import shutil
+import subprocess
+import sys
+import uuid
 
 import numpy as np
 import pytest
@@ -198,3 +201,90 @@ def test_partial_store_rerun_equals_clean_build(spark, tmp_path, small_store):
     assert b["n_chunks_written"] == 2
     assert len(chunk_files(store)) == 4
     np.testing.assert_array_equal(read_array(store), clean)
+
+
+def _store_bytes(store):
+    out = {}
+    for name in sorted(os.listdir(store)):
+        with open(os.path.join(store, name), "rb") as f:
+            out[name] = f.read()
+    return out
+
+
+# Builds the small layout on a driver in America/New_York, under
+# local[2,2] (task retries on), with a scene reader that fails exactly
+# once across all tasks (the marker file is created atomically).
+_NON_UTC_RETRY_BUILD = """
+import datetime as dt, os, sys
+from flytemosaic_spark.fixtures import tile_grid
+from flytemosaic_spark.pipeline import build_mosaic, synthetic_scene
+from flytemosaic_spark.session import get_spark
+
+store, marker = sys.argv[1:3]
+
+
+def fails_once(tile_id, period, n_bands, tile_px):
+    try:
+        os.close(os.open(marker, os.O_CREAT | os.O_EXCL))
+    except FileExistsError:
+        return synthetic_scene(tile_id, period, n_bands, tile_px)
+    raise RuntimeError("injected scene read failure")
+
+
+spark = get_spark("non-utc-retry", cpus=2, shuffle_partitions=2, driver_memory="1g",
+                  extra_conf={"spark.master": "local[2,2]"})
+spark.sparkContext.setLogLevel("ERROR")
+build_mosaic(spark, tile_grid(spark, n=4), (0, 0, 2, 1),
+             [dt.datetime(2020, 6, 1), dt.datetime(2021, 2, 1)], store,
+             n_bands=4, tile_px=16, scene_reader=fails_once)
+spark.stop()
+"""
+
+
+def test_non_utc_driver_with_task_retry_equals_clean_build(tmp_path, small_store):
+    """A driver outside UTC plans the same layout (snapped times are
+    naive year starts, the kernel sees integer time indices), and a
+    task retried after a failed scene read rewrites its chunks
+    atomically: the store is byte-equal to a clean UTC build."""
+    clean_store, _ = small_store
+    store, marker = str(tmp_path / "mosaic"), str(tmp_path / "failed-once")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, TZ="America/New_York")
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, [repo, env.get("PYTHONPATH")]))
+    proc = subprocess.run(
+        [sys.executable, "-c", _NON_UTC_RETRY_BUILD, store, marker],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert os.path.exists(marker)  # the injected failure did fire
+    assert _store_bytes(store) == _store_bytes(clean_store)
+
+
+def _jobs_run_by(spark, fn) -> int:
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4()}"
+    sc.setJobGroup(group, "build_mosaic job-count guard")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_build_job_count(spark, tmp_path):
+    """Planning is driver-side: a clean build is the tile-index collect
+    plus one kernel job, and a rerun that finds every chunk runs no
+    kernel job at all."""
+    tiles = tile_grid(spark, n=4)
+    store = str(tmp_path / "mosaic")
+    layouts = []
+
+    def build(skip_existing):
+        layouts.append(build_mosaic(
+            spark, tiles, SMALL_BBOX, TIMES, store, n_bands=N_BANDS,
+            tile_px=TILE_PX, skip_existing=skip_existing,
+        ))
+
+    assert _jobs_run_by(spark, lambda: build(False)) <= 2
+    assert _jobs_run_by(spark, lambda: build(True)) <= 1
+    assert [a["n_chunks_written"] for a in layouts] == [4, 0]
