@@ -6,12 +6,9 @@ declared schema from :mod:`flytemosaic_spark.schemas`.
 
 from __future__ import annotations
 
-import datetime as dt
-
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
-from flytemosaic_spark.schemas import RASTER_LONG, TILE_INDEX
+from flytemosaic_spark.schemas import TILE_INDEX
 
 
 def tile_grid(spark: SparkSession, n: int = 20, origin: tuple[float, float] = (0.0, 0.0)) -> DataFrame:
@@ -37,61 +34,3 @@ def tile_grid(spark: SparkSession, n: int = 20, origin: tuple[float, float] = (0
                 )
             )
     return spark.createDataFrame(rows, TILE_INDEX)
-
-
-def raster_long(
-    spark: SparkSession,
-    n_tiles: int = 4,
-    n_times: int = 8,
-    n_bands: int = 8,
-    size: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """B3 — long-format raster cube: dims (tile, time, band, y, x),
-    band ``n_bands`` is the QA flag (1=clear, reference glad.py:260-261),
-    value 0.0 means nodata (glad.py:79-81). Built vectorized via
-    pandas/Arrow — ~1M rows in well under a second."""
-    import pandas as pd
-
-    cubes = raster_long_arrays(n_tiles, n_times, n_bands, size, seed)
-    times = np.array(
-        [dt.datetime(2020, 1, 1) + dt.timedelta(days=16 * i) for i in range(n_times)],
-        dtype="datetime64[us]",
-    )
-    ti, bi, yi, xi = np.indices((n_times, n_bands, size, size)).reshape(4, -1)
-    frames = []
-    for tile, vals in cubes.items():
-        frames.append(
-            pd.DataFrame(
-                {
-                    "tile_id": tile,
-                    "time": times[ti],
-                    "band": (bi + 1).astype("int32"),
-                    "y": yi.astype("int32"),
-                    "x": xi.astype("int32"),
-                    "value": vals.reshape(-1),
-                }
-            )
-        )
-    return spark.createDataFrame(pd.concat(frames, ignore_index=True), RASTER_LONG)
-
-
-def raster_long_arrays(
-    n_tiles: int = 4,
-    n_times: int = 8,
-    n_bands: int = 8,
-    size: int = 64,
-    seed: int = 42,
-) -> dict[str, np.ndarray]:
-    """The same cube as :func:`raster_long`, as numpy arrays keyed by
-    tile — the oracle side for kernel equivalence tests."""
-    rng = np.random.default_rng(seed)
-    out = {}
-    for i in range(n_tiles):
-        vals = rng.integers(0, 4000, size=(n_times, n_bands, size, size)).astype("f4")
-        qa = rng.integers(0, 2, size=(n_times, size, size))
-        vals[:, n_bands - 1, :, :] = qa
-        mask = rng.random((n_times, n_bands - 1, size, size)) < 0.05
-        vals[:, : n_bands - 1][mask] = 0.0
-        out[f"T{i:02d}"] = vals
-    return out

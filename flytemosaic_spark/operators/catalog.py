@@ -21,11 +21,7 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flytemosaic_spark.functions.temporal import (
-    period_to_date,
-    period_window,
-    snap_to_year,
-)
+from flytemosaic_spark.functions.temporal import period_to_date, period_window
 
 URL_TEMPLATE = "s3://scenes/%s/%s/%d.tif"  # feature / tile / period
 
@@ -136,35 +132,3 @@ def required_scenes(
         .distinct()
     )
     return scenes
-
-
-def feature_targets(
-    spark: SparkSession,
-    tile_index: DataFrame,
-    bbox: tuple[float, float, float, float],
-    times: list[dt.datetime],
-    feature: str = "annual_means",
-) -> DataFrame:
-    """§3.3 step 1 — deterministic (tile, snapped-time) → output-url
-    targets (J6 cross join; reference flyte/scenes.py:204-216,
-    protocols.py:318-333)."""
-    times_df = (
-        spark.createDataFrame([(t,) for t in times], "t timestamp")
-        .select(snap_to_year(F.col("t")).alias("time"))
-        .distinct()
-    )
-    tiles = tiles_for_bbox(tile_index, bbox).select("tile_id")
-    return (
-        tiles.crossJoin(times_df)
-        .select(
-            "tile_id",
-            "time",
-            F.format_string(
-                "s3://features/%s/%s/%s.tif",
-                F.lit(feature),
-                F.col("tile_id"),
-                F.date_format("time", "yyyyMMdd"),
-            ).alias("url"),
-            F.lit(feature).alias("feature"),
-        )
-    )

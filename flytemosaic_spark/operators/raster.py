@@ -1,214 +1,61 @@
-"""Array/raster operators in both engine representations (SURVEY §1.2).
+"""The flagship array kernels in plain numpy: the QA-masked temporal
+composite (reference flytemosaic/datasets/glad.py:259-282) and the
+nan-aware block-average downsample (reference flyte/utils.py:100-109,
+GDAL ``RESAMPLING=average``).
 
-Long model (one row per pixel sample): every array op is a pure
-DataFrame expression — QA-masked temporal mean/median are conditional
-aggregations (reference flagship kernel: flytemosaic/datasets/
-glad.py:259-282), coarsening is a floor-div groupBy (flyte/
-utils.py:100-109), band slice/cast are filters/casts.
-
-Chunk model (one row per (time, chunk) block): kernels are
-Arrow-vectorized grouped-map pandas UDFs over numpy blocks — the
-exact execution shape of the reference's xarray reduction
-(flytemosaic/datasets/utils.py:99-151), with Spark's shuffle doing
-what Flyte's task fan-out did. ``applyInPandas`` groups by
-(tile, y0, x0) so one task reduces one chunk's full time stack.
-
-Both representations are equivalence-tested against each other and
-against numpy oracles in tests/test_raster.py.
+They import no Spark: ``pipeline.build_mosaic`` calls them inside its
+fused ``mapInPandas`` kernel, once per output chunk, and tests run
+them on local arrays.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-QA_BAND = 8
 QA_CLEAR = 1.0
+REDUCERS = ("mean", "median")
 
 
-# --------------------------------------------------------------------------
-# long model
-# --------------------------------------------------------------------------
+def composite(scenes: Iterable[np.ndarray], reducer: str) -> np.ndarray:
+    """Reduce a time stack of ``(bands, y, x)`` scenes, whose last band
+    is the QA flag, to a float32 ``(bands - 1, y, x)`` composite of the
+    values where QA == ``QA_CLEAR``; a pixel clear in no scene is NaN.
 
-
-def masked_temporal_mean_long(df: DataFrame, qa_band: int = QA_BAND) -> DataFrame:
-    """A6 — QA-masked mean over time per (tile, band, y, x).
-
-    The per-(tile, time, pixel) QA flag is distributed to that pixel's
-    value-band rows with a window over the pixel key — one shuffle,
-    shared with the subsequent aggregation (no self-join needed).
+    ``mean`` streams: one scene is resident at a time, next to f8 sum
+    and i4 count accumulators, so peak memory does not grow with the
+    stack (the reference spills to local zarr for the same reason,
+    utils.py:128-131). ``median`` needs the whole stack.
     """
-    w = Window.partitionBy("tile_id", "time", "y", "x")
-    clear = F.max(F.when(F.col("band") == qa_band, F.col("value"))).over(w)
-    return (
-        df.withColumn("clear", clear)
-        .where(F.col("band") < qa_band)
-        .groupBy("tile_id", "band", "y", "x")
-        .agg(
-            F.avg(F.when(F.col("clear") == QA_CLEAR, F.col("value")))
-            .cast("float")
-            .alias("value")
-        )
-    )
-
-
-def masked_temporal_median_long(df: DataFrame, qa_band: int = QA_BAND) -> DataFrame:
-    """A7 — QA-masked median over time (exact percentile; groups are
-    time-stack sized, i.e. tiny, so exact is safe at any scale)."""
-    w = Window.partitionBy("tile_id", "time", "y", "x")
-    clear = F.max(F.when(F.col("band") == qa_band, F.col("value"))).over(w)
-    return (
-        df.withColumn("clear", clear)
-        .where(F.col("band") < qa_band)
-        .groupBy("tile_id", "band", "y", "x")
-        .agg(
-            F.percentile(
-                F.when(F.col("clear") == QA_CLEAR, F.col("value")), F.lit(0.5)
-            )
-            .cast("float")
-            .alias("value")
-        )
-    )
-
-
-def coarsen_long(df: DataFrame, factor: int) -> DataFrame:
-    """A9 — spatial downsample: mean over factor×factor pixel blocks
-    (reference flyte/utils.py:100-109)."""
-    return (
-        df.groupBy(
-            "tile_id",
-            "time",
-            "band",
-            F.floor(F.col("y") / factor).cast("int").alias("yb"),
-            F.floor(F.col("x") / factor).cast("int").alias("xb"),
-        )
-        .agg(F.avg("value").cast("float").alias("value"))
-    )
-
-
-def band_slice(df: DataFrame, lo: int, hi: int) -> DataFrame:
-    """P8 — keep bands in [lo, hi) (reference glad.py:262)."""
-    return df.where((F.col("band") >= lo) & (F.col("band") < hi))
-
-
-# --------------------------------------------------------------------------
-# chunk model
-# --------------------------------------------------------------------------
-
-
-def long_to_chunks(df: DataFrame, chunk: int, n_bands: int = QA_BAND) -> DataFrame:
-    """Reshape the long model into the chunk-table model: one row per
-    (tile, time, chunk) with a row-major [band, y, x] payload.
-
-    The groupBy key is the chunk origin — the same shuffle that
-    co-locates a chunk's pixels is the one the downstream kernel
-    needs, so the composite pipeline shuffles once.
-    """
-    out_schema = (
-        "tile_id string, time timestamp, y0 int, x0 int, "
-        "shape array<int>, payload array<float>"
-    )
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        tile = pdf["tile_id"].iloc[0]
-        time = pdf["time"].iloc[0]
-        y0 = int(pdf["y0"].iloc[0]) * chunk
-        x0 = int(pdf["x0"].iloc[0]) * chunk
-        ny = int(pdf["y"].max()) - y0 + 1
-        nx = int(pdf["x"].max()) - x0 + 1
-        block = np.full((n_bands, ny, nx), np.nan, dtype="f4")
-        block[
-            pdf["band"].to_numpy() - 1,
-            pdf["y"].to_numpy() - y0,
-            pdf["x"].to_numpy() - x0,
-        ] = pdf["value"].to_numpy()
-        return pd.DataFrame(
-            {
-                "tile_id": [tile],
-                "time": [time],
-                "y0": [y0],
-                "x0": [x0],
-                "shape": [[n_bands, ny, nx]],
-                "payload": [block.ravel()],
-            }
-        )
-
-    keyed = df.withColumn("y0", F.floor(F.col("y") / chunk).cast("int")).withColumn(
-        "x0", F.floor(F.col("x") / chunk).cast("int")
-    )
-    return keyed.groupBy("tile_id", "time", "y0", "x0").applyInPandas(
-        assemble, out_schema
-    )
-
-
-def composite_chunks(
-    chunks: DataFrame,
-    reducer: str = "mean",
-    qa_band: int = QA_BAND,
-) -> DataFrame:
-    """The flagship composite kernel, chunk model: per (tile, chunk),
-    stack the time axis, mask where the QA band != 1, and reduce with
-    nanmean/nanmedian — numerically identical to the reference's
-    xarray kernel (glad.py:259-282) because it *is* the same numpy
-    reduction, just fed by Spark's shuffle instead of dask's graph.
-    """
-    if reducer not in ("mean", "median"):
-        raise ValueError(f"unknown reducer: {reducer}")
-    out_schema = "tile_id string, y0 int, x0 int, shape array<int>, payload array<float>"
-
-    def reduce_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        tile = pdf["tile_id"].iloc[0]
-        y0 = int(pdf["y0"].iloc[0])
-        x0 = int(pdf["x0"].iloc[0])
-        shape = list(pdf["shape"].iloc[0])
-        stack = np.stack(
-            [np.asarray(p, dtype="f4").reshape(shape) for p in pdf["payload"]]
-        )  # (time, band, y, x)
-        qa = stack[:, qa_band - 1 : qa_band, :, :]
-        vals = stack[:, : qa_band - 1, :, :]
-        masked = np.where(qa == QA_CLEAR, vals, np.nan)
+    if reducer not in REDUCERS:
+        raise ValueError(f"unknown reducer: {reducer!r}, expected one of {REDUCERS}")
+    if reducer == "median":
+        stack = np.stack(list(scenes))
+        vals = np.where(stack[:, -1:] == QA_CLEAR, stack[:, :-1], np.nan)
         with np.errstate(invalid="ignore"):
-            out = (np.nanmean if reducer == "mean" else np.nanmedian)(masked, axis=0)
-        return pd.DataFrame(
-            {
-                "tile_id": [tile],
-                "y0": [y0],
-                "x0": [x0],
-                "shape": [[qa_band - 1, shape[1], shape[2]]],
-                "payload": [out.astype("f4").ravel()],
-            }
-        )
+            return np.nanmedian(vals, axis=0).astype("f4")
+    acc = cnt = None
+    for s in scenes:
+        if acc is None:
+            acc = np.zeros(s[:-1].shape, "f8")
+            cnt = np.zeros(s.shape[1:], "i4")
+        ok = s[-1] == QA_CLEAR
+        np.add(acc, s[:-1], out=acc, where=ok[None, :, :])
+        cnt += ok
+    if acc is None:
+        raise ValueError("composite of no scenes")
+    with np.errstate(invalid="ignore", divide="ignore"):
+        comp = (acc / cnt).astype("f4")
+    comp[:, cnt == 0] = np.nan
+    return comp
 
-    return chunks.groupBy("tile_id", "y0", "x0").applyInPandas(reduce_group, out_schema)
 
-
-def chunks_to_long(chunks: DataFrame, has_time: bool = False) -> DataFrame:
-    """Explode the chunk model back to long rows (for equivalence
-    tests and relational probes over composite outputs)."""
-    schema = "tile_id string, band int, y int, x int, value float"
-    if has_time:
-        schema = "tile_id string, time timestamp, band int, y int, x int, value float"
-
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                nb, ny, nx = row.shape
-                block = np.asarray(row.payload, dtype="f4").reshape(nb, ny, nx)
-                b, y, x = np.indices((nb, ny, nx)).reshape(3, -1)
-                rec = {
-                    "tile_id": row.tile_id,
-                    "band": (b + 1).astype("int32"),
-                    "y": (y + row.y0).astype("int32"),
-                    "x": (x + row.x0).astype("int32"),
-                    "value": block.ravel(),
-                }
-                if has_time:
-                    rec["time"] = row.time
-                yield pd.DataFrame(rec)
-
-    return chunks.mapInPandas(explode, schema)
+def coarsen(arr: np.ndarray, factor: int) -> np.ndarray:
+    """Block-average ``(bands, y, x)`` down by ``factor`` on both axes,
+    NaN-aware: NaN is excluded from a block's mean, and an all-NaN
+    block stays NaN (GDAL ``average`` over nodata)."""
+    b, ny, nx = arr.shape
+    blocks = arr.reshape(b, ny // factor, factor, nx // factor, factor)
+    with np.errstate(invalid="ignore"):
+        return np.nanmean(blocks, axis=(2, 4)).astype("f4")

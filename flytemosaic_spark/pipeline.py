@@ -14,7 +14,8 @@ Stages (SURVEY §3.1):
    output chunk, its scene periods inside the row): each row loads
    its scene stack (the synthetic source stands in for a COG reader —
    same array contract, reference utils.py:99-151), runs the
-   QA-masked mean/median composite (glad.py:259-282), and writes its
+   QA-masked mean/median composite (``operators/raster.composite``,
+   reference glad.py:259-282), and writes its
    disjoint store chunk (S10) — all inside one Python worker.
 
 Nothing shuffles: manifest rows are distinct by construction, and
@@ -38,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from flytemosaic_spark.functions.temporal import period_window
 from flytemosaic_spark.operators.catalog import tiles_for_bbox
-from flytemosaic_spark.operators.raster import QA_CLEAR
+from flytemosaic_spark.operators.raster import REDUCERS, coarsen, composite
 from flytemosaic_spark.sources.chunkstore import (
     chunk_files,
     read_chunk,
@@ -79,29 +80,6 @@ def plan_targets(
     pruned = tiles_for_bbox(tile_index, bbox).select("tile_id", "minx", "miny")
     tiles = sorted(tuple(r) for r in pruned.collect()) if snapped else []
     return tiles, snapped, windows
-
-
-def target_scene_periods(
-    spark: SparkSession,
-    tile_index: DataFrame,
-    bbox: tuple[float, float, float, float],
-    times: list[dt.datetime],
-    window_days: int = 365,
-    latest: str = "2026-01-01",
-) -> DataFrame:
-    """Stage 1 as a frame — (tile_id, time, period) for every scene
-    feeding every (tile, snapped-time) composite target (J6 cross + J7
-    expansion), from the driver plan :func:`build_mosaic` runs."""
-    tiles, snapped, windows = plan_targets(tile_index, bbox, times, window_days, latest)
-    return spark.createDataFrame(
-        [
-            (tid, t, p)
-            for tid, _, _ in tiles
-            for t, window in zip(snapped, windows)
-            for p in window
-        ],
-        "tile_id string, time timestamp, period bigint",
-    )
 
 
 def build_mosaic(
@@ -152,6 +130,8 @@ def build_mosaic(
     shuffle and the written bytes shrink by factor² before they ever
     leave the task.
     """
+    if reducer not in REDUCERS:
+        raise ValueError(f"unknown reducer: {reducer!r}, expected one of {REDUCERS}")
     if resample_factor < 1:
         raise ValueError(f"resample_factor must be >= 1, got {resample_factor}")
     if tile_px % resample_factor:
@@ -209,50 +189,19 @@ def build_mosaic(
     meta = read_template(store_path)
     reader = scene_reader or synthetic_scene
 
-    def load_composite(tile: str, periods) -> np.ndarray:
-        if reducer == "mean":
-            # streaming accumulation: one scene resident at a time, so
-            # peak memory is (1 scene + 2 accumulators) instead of the
-            # whole stack + nanmean temporaries — the difference between
-            # bandwidth-bound thrashing and cache-friendly accumulation
-            # when 32 tasks share one node (reference spills to local
-            # zarr for the same reason, utils.py:128-131 / D7)
-            acc = np.zeros((n_bands - 1, tile_px, tile_px), "f8")
-            cnt = np.zeros((tile_px, tile_px), "i4")
-            for p in periods:
-                s = reader(tile, int(p), n_bands, tile_px)
-                ok = s[n_bands - 1] == QA_CLEAR
-                np.add(acc, s[: n_bands - 1], out=acc, where=ok[None, :, :])
-                cnt += ok
-            with np.errstate(invalid="ignore", divide="ignore"):
-                comp = (acc / cnt).astype("f4")
-            comp[:, cnt == 0] = np.nan
-        else:
-            stack = np.stack(
-                [reader(tile, int(p), n_bands, tile_px) for p in periods]
-            )
-            qa = stack[:, n_bands - 1 : n_bands]
-            vals = np.where(qa == QA_CLEAR, stack[:, : n_bands - 1], np.nan)
-            with np.errstate(invalid="ignore"):
-                comp = np.nanmedian(vals, axis=0).astype("f4")
-        if resample_factor > 1:
-            # A9 block-average downsample, fused: nan-aware mean over
-            # factor x factor blocks (GDAL 'average' semantics — nodata
-            # excluded, all-nodata block stays nodata)
-            fctr = resample_factor
-            blocks = comp.reshape(n_bands - 1, out_px, fctr, out_px, fctr)
-            with np.errstate(invalid="ignore"):
-                comp = np.nanmean(blocks, axis=(2, 4)).astype("f4")
-        return comp
-
     def load_composite_write(batches):
         for pdf in batches:
             for tile, t, yi, xi, periods in zip(
                 pdf["tile_id"], pdf["t"], pdf["yi"], pdf["xi"], pdf["periods"]
             ):
+                comp = composite(
+                    (reader(tile, int(p), n_bands, tile_px) for p in periods),
+                    reducer,
+                )
+                if resample_factor > 1:
+                    comp = coarsen(comp, resample_factor)
                 # S10 region write, task-local: (t, 0, yi, xi) is
                 # chunk-aligned by construction (chunk == one tile slab)
-                comp = load_composite(tile, periods)
                 write_chunk(store_path, meta, (int(t), 0, int(yi), int(xi)), comp)
             yield pd.DataFrame({"n_chunks": [len(pdf)]})
 

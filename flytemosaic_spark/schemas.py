@@ -1,5 +1,5 @@
-"""Declared schemas for the engine's catalog and array models
-(SURVEY §1.1-§1.2). Schemas are fixed/declared, never inferred —
+"""Declared schemas for the engine's catalog and media tables
+(SURVEY §1.1). Schemas are fixed/declared, never inferred —
 mirroring the reference, where band names, dtype and nodata come from
 the dataset protocol (reference: flytemosaic/datasets/protocols.py:139-170).
 """
@@ -7,10 +7,8 @@ the dataset protocol (reference: flytemosaic/datasets/protocols.py:139-170).
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     DoubleType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -47,33 +45,6 @@ SCENE_CATALOG = StructType(
         StructField("miny", DoubleType(), True),
         StructField("maxx", DoubleType(), True),
         StructField("maxy", DoubleType(), True),
-    ]
-)
-
-# B3 — long/tall raster model: one row per pixel sample. Enables pure
-# DataFrame expression of every array op (SURVEY §1.2 model 2).
-RASTER_LONG = StructType(
-    [
-        StructField("tile_id", StringType(), False),
-        StructField("time", TimestampType(), False),
-        StructField("band", IntegerType(), False),
-        StructField("y", IntegerType(), False),
-        StructField("x", IntegerType(), False),
-        StructField("value", FloatType(), True),
-    ]
-)
-
-# B4 — chunk-table model: one row per (time, chunk) with the pixel
-# block as a payload array (SURVEY §1.2 model 1; chunk geometry is the
-# unit of parallelism, reference: flytemosaic/mosaics.py:232-303).
-RASTER_CHUNKS = StructType(
-    [
-        StructField("tile_id", StringType(), False),
-        StructField("time", TimestampType(), False),
-        StructField("y0", IntegerType(), False),
-        StructField("x0", IntegerType(), False),
-        StructField("shape", ArrayType(IntegerType(), False), False),
-        StructField("payload", ArrayType(FloatType(), True), False),
     ]
 )
 

@@ -7,11 +7,7 @@ from __future__ import annotations
 import datetime as dt
 
 from flytemosaic_spark.fixtures import tile_grid
-from flytemosaic_spark.operators.catalog import (
-    feature_targets,
-    required_scenes,
-    tiles_for_bbox,
-)
+from flytemosaic_spark.operators.catalog import required_scenes, tiles_for_bbox
 
 
 def test_bbox_prune_exact(spark):
@@ -48,12 +44,3 @@ def test_required_scenes_clamps_to_earliest(spark):
     )
     periods = [int(r.url.rsplit("/", 1)[-1].removesuffix(".tif")) for r in df.collect()]
     assert min(periods) == 392  # 1997-01-01 = period base, nothing earlier
-
-
-def test_feature_targets_cross(spark):
-    tiles = tile_grid(spark, n=4)
-    times = [dt.datetime(2020, 5, 5), dt.datetime(2020, 9, 9), dt.datetime(2022, 1, 1)]
-    df = feature_targets(spark, tiles, (0, 0, 2, 2), times)
-    rows = df.collect()
-    assert len(rows) == 4 * 2  # 4 tiles x 2 distinct snapped years
-    assert all(r.url.endswith((".tif")) and "features/" in r.url for r in rows)

@@ -16,12 +16,12 @@ import numpy as np
 import pytest
 
 from flytemosaic_spark.fixtures import tile_grid
+from flytemosaic_spark.functions.temporal import period_window
 from flytemosaic_spark.operators.raster import QA_CLEAR
 from flytemosaic_spark.pipeline import (
     build_mosaic,
     export_feature_geotiffs,
     synthetic_scene,
-    target_scene_periods,
 )
 from flytemosaic_spark.sources.chunkstore import (
     chunk_files,
@@ -33,6 +33,16 @@ from flytemosaic_spark.sources.chunkstore import (
 N_BANDS, TILE_PX = 4, 16
 BBOX = (0.2, 0.2, 2.8, 1.8)  # x tiles {0,1,2} x y tiles {0,1} = 6 tiles
 TIMES = [dt.datetime(2020, 6, 1), dt.datetime(2021, 2, 1)]
+
+
+def _periods_by_target(layout):
+    """Each (tile, snapped time) target's scene periods, from the
+    build's own layout and the default 365-day window."""
+    return {
+        (tile_id, t): list(period_window(t, 365, "2026-01-01"))
+        for tile_id in layout["origins"]
+        for t in layout["times"]
+    }
 
 
 def _oracle(layout, periods_by_target, reducer="mean"):
@@ -68,11 +78,8 @@ def test_mosaic_matches_numpy_oracle(spark, tmp_path, reducer):
     # 6 tiles x 2 times, one chunk per (tile, time)
     assert layout["n_chunks_written"] == 12
 
-    periods_by_target = {}
-    for r in target_scene_periods(spark, tiles, BBOX, TIMES).collect():
-        periods_by_target.setdefault((r.tile_id, r.time), []).append(r.period)
     got = read_array(store)
-    want = _oracle(layout, periods_by_target, reducer)
+    want = _oracle(layout, _periods_by_target(layout), reducer)
     np.testing.assert_allclose(got, want, rtol=1e-6, equal_nan=True)
     assert not np.isnan(got).all()
 
@@ -92,9 +99,6 @@ def test_mosaic_resample_matches_numpy_oracle(spark, tmp_path, factor):
     assert layout["shape"][2:] == (2 * out_px, 3 * out_px)
     assert layout["chunks"][2:] == (out_px, out_px)
 
-    periods_by_target = {}
-    for r in target_scene_periods(spark, tiles, BBOX, TIMES).collect():
-        periods_by_target.setdefault((r.tile_id, r.time), []).append(r.period)
     native_layout = dict(layout)
     native_layout["shape"] = (
         layout["shape"][0], layout["shape"][1],
@@ -103,7 +107,7 @@ def test_mosaic_resample_matches_numpy_oracle(spark, tmp_path, factor):
     native_layout["origins"] = {
         k: (y * factor, x * factor) for k, (y, x) in layout["origins"].items()
     }
-    native = _oracle(native_layout, periods_by_target)
+    native = _oracle(native_layout, _periods_by_target(layout))
     t, b, h, w = native.shape
     blocks = native.reshape(t, b, h // factor, factor, w // factor, factor)
     with np.errstate(invalid="ignore"):
@@ -111,6 +115,16 @@ def test_mosaic_resample_matches_numpy_oracle(spark, tmp_path, factor):
     got = read_array(store)
     np.testing.assert_allclose(got, want, rtol=1e-6, equal_nan=True)
     assert not np.isnan(got).all()
+
+
+def test_unknown_reducer_is_rejected_before_the_store_exists(spark, tmp_path):
+    """A reducer other than mean/median fails on the driver, before
+    the store template is written (it used to build a median mosaic)."""
+    store = tmp_path / "mosaic_max"
+    with pytest.raises(ValueError, match="unknown reducer"):
+        build_mosaic(spark, tile_grid(spark, n=4), SMALL_BBOX, TIMES, str(store),
+                     n_bands=N_BANDS, tile_px=TILE_PX, reducer="max")
+    assert not store.exists()
 
 
 def test_mosaic_rerun_is_idempotent(spark, tmp_path):

@@ -1,112 +1,96 @@
-"""Kernel correctness: long model vs chunk model vs numpy oracle.
-
-The flagship composite (QA-masked temporal mean/median, reference
-glad.py:259-282) is implemented twice (SURVEY §1.2); both forms must
-agree with the plain-numpy reduction on the same synthetic cube."""
+"""The numpy array kernels against independent numpy oracles: the
+QA-masked temporal composite (reference glad.py:259-282) and the
+nan-aware block average. No Spark; the golden build tests in
+test_pipeline.py check the same kernels end to end."""
 
 from __future__ import annotations
+
+import weakref
 
 import numpy as np
 import pytest
 
-from flytemosaic_spark.fixtures import raster_long, raster_long_arrays
-from flytemosaic_spark.operators.raster import (
-    QA_CLEAR,
-    band_slice,
-    chunks_to_long,
-    coarsen_long,
-    composite_chunks,
-    long_to_chunks,
-    masked_temporal_mean_long,
-    masked_temporal_median_long,
+from flytemosaic_spark.operators.raster import coarsen, composite
+
+pytestmark = pytest.mark.filterwarnings(
+    "ignore:All-NaN slice:RuntimeWarning", "ignore:Mean of empty slice:RuntimeWarning"
 )
 
-N_TILES, N_TIMES, N_BANDS, SIZE = 2, 4, 4, 16
+N_SCENES, N_BANDS, SIZE = 6, 4, 8
+NEVER_CLEAR = (0, 0)  # pixel clear in no scene
 
 
-@pytest.fixture(scope="module")
-def cube(spark):
-    df = raster_long(spark, N_TILES, N_TIMES, N_BANDS, SIZE).cache()
-    arrays = raster_long_arrays(N_TILES, N_TIMES, N_BANDS, SIZE)
-    yield df, arrays
-    df.unpersist()
+def _scene(k: int) -> np.ndarray:
+    """Scene ``k`` of a deterministic stack (bands, y, x); the last band
+    is QA in {0, 1, 2}, so only QA == 1 counts as clear."""
+    rng = np.random.default_rng(100 + k)
+    s = rng.integers(0, 4000, size=(N_BANDS, SIZE, SIZE)).astype("f4")
+    s[-1] = rng.integers(0, 3, size=(SIZE, SIZE))
+    s[-1][NEVER_CLEAR] = 0
+    return s
 
 
-def _oracle(arrays, reducer):
-    out = {}
-    for tile, vals in arrays.items():
-        qa = vals[:, N_BANDS - 1 : N_BANDS]
-        masked = np.where(qa == QA_CLEAR, vals[:, : N_BANDS - 1], np.nan)
-        with np.errstate(invalid="ignore"):
-            out[tile] = (np.nanmean if reducer == "mean" else np.nanmedian)(
-                masked, axis=0
-            ).astype("f4")
-    return out
-
-
-def _to_cube(rows, n_bands, size):
-    cubes = {}
-    for r in rows:
-        cubes.setdefault(r.tile_id, np.full((n_bands, size, size), np.nan, "f4"))[
-            r.band - 1, r.y, r.x
-        ] = np.nan if r.value is None else r.value
-    return cubes
+def _oracle(reducer: str) -> np.ndarray:
+    stack = np.stack([_scene(k) for k in range(N_SCENES)]).astype("f8")
+    masked = np.where(stack[:, -1:] == 1, stack[:, :-1], np.nan)
+    return (np.nanmean if reducer == "mean" else np.nanmedian)(masked, axis=0)
 
 
 @pytest.mark.parametrize("reducer", ["mean", "median"])
-def test_long_model_matches_numpy(cube, reducer):
-    df, arrays = cube
-    fn = masked_temporal_mean_long if reducer == "mean" else masked_temporal_median_long
-    got = _to_cube(fn(df, qa_band=N_BANDS).collect(), N_BANDS - 1, SIZE)
-    want = _oracle(arrays, reducer)
-    for tile in want:
-        np.testing.assert_allclose(got[tile], want[tile], rtol=1e-6, equal_nan=True)
+def test_composite_matches_numpy(reducer):
+    got = composite((_scene(k) for k in range(N_SCENES)), reducer)
+    assert got.dtype == np.float32
+    assert got.shape == (N_BANDS - 1, SIZE, SIZE)
+    want = _oracle(reducer)
+    np.testing.assert_allclose(got, want, rtol=1e-6, equal_nan=True)
+    assert np.isnan(got[(slice(None), *NEVER_CLEAR)]).all()
 
 
-@pytest.mark.parametrize("reducer", ["mean", "median"])
-def test_chunk_model_matches_numpy(spark, cube, reducer):
-    df, arrays = cube
-    chunks = long_to_chunks(df, chunk=8, n_bands=N_BANDS)
-    out = composite_chunks(chunks, reducer=reducer, qa_band=N_BANDS)
-    got = _to_cube(chunks_to_long(out).collect(), N_BANDS - 1, SIZE)
-    want = _oracle(arrays, reducer)
-    for tile in want:
-        np.testing.assert_allclose(got[tile], want[tile], rtol=1e-6, equal_nan=True)
+def test_composite_mean_keeps_one_scene_resident():
+    """The mean streams: by the time scene k+1 is produced, scene k-1
+    has been released."""
+    refs = []
+
+    def scenes():
+        for k in range(N_SCENES):
+            if k >= 2:
+                assert refs[k - 2]() is None, f"scene {k - 2} alive at scene {k}"
+            scene = _scene(k)
+            refs.append(weakref.ref(scene))
+            yield scene
+
+    got = composite(scenes(), "mean")
+    assert len(refs) == N_SCENES
+    np.testing.assert_allclose(got, _oracle("mean"), rtol=1e-6, equal_nan=True)
 
 
-def test_chunk_roundtrip_preserves_values(spark, cube):
-    df, arrays = cube
-    back = chunks_to_long(long_to_chunks(df, chunk=8, n_bands=N_BANDS), has_time=True)
-    assert back.count() == df.count()
-    a = {(r.tile_id, str(r.time), r.band, r.y, r.x): r.value for r in back.collect()}
-    b = {(r.tile_id, str(r.time), r.band, r.y, r.x): r.value for r in df.collect()}
-    assert a == b
+def test_composite_rejects_unknown_reducer():
+    def scenes():
+        raise AssertionError("an unknown reducer must not read any scene")
+        yield
+
+    with pytest.raises(ValueError, match="unknown reducer"):
+        composite(scenes(), "max")
+    with pytest.raises(ValueError):
+        composite(iter(()), "mean")
 
 
-def test_coarsen_matches_numpy(cube):
-    df, arrays = cube
+def test_coarsen_matches_numpy():
     factor = 4
-    rows = coarsen_long(df, factor).collect()
-    tile = sorted(arrays)[0]
-    want = (
-        arrays[tile]
-        .reshape(N_TIMES, N_BANDS, SIZE // factor, factor, SIZE // factor, factor)
-        .mean(axis=(3, 5))
-    )
-    got = {}
-    for r in rows:
-        if r.tile_id == tile:
-            got[(str(r.time), r.band, r.yb, r.xb)] = r.value
-    times = sorted({k[0] for k in got})
-    for ti, t in enumerate(times):
-        for b in range(N_BANDS):
-            for yb in range(SIZE // factor):
-                for xb in range(SIZE // factor):
-                    np.testing.assert_allclose(
-                        got[(t, b + 1, yb, xb)], want[ti, b, yb, xb], rtol=1e-5
-                    )
+    rng = np.random.default_rng(7)
+    arr = rng.random((2, 8, 12)).astype("f4")
+    arr[0, :4, :4] = np.nan  # all-NaN block: stays NaN
+    arr[1, 4:8, 8:12][::2] = np.nan  # half-NaN block: NaN excluded
+    got = coarsen(arr, factor)
 
-
-def test_band_slice(cube):
-    df, _ = cube
-    assert band_slice(df, 1, 3).select("band").distinct().count() == 2
+    want = np.empty((2, 2, 3))
+    for b in range(2):
+        for yb in range(2):
+            for xb in range(3):
+                block = arr[b, yb * factor : (yb + 1) * factor, xb * factor : (xb + 1) * factor]
+                vals = [float(v) for v in block.ravel() if not np.isnan(v)]
+                want[b, yb, xb] = sum(vals) / len(vals) if vals else np.nan
+    assert got.dtype == np.float32
+    np.testing.assert_allclose(got, want, rtol=1e-6, equal_nan=True)
+    assert np.isnan(got[0, 0, 0])
+    assert np.isnan(got).sum() == 1
