@@ -5,6 +5,7 @@ test_pipeline.py check the same kernels end to end."""
 
 from __future__ import annotations
 
+import statistics
 import weakref
 
 import numpy as np
@@ -36,13 +37,51 @@ def _oracle(reducer: str) -> np.ndarray:
     return (np.nanmean if reducer == "mean" else np.nanmedian)(masked, axis=0)
 
 
+def _long_oracle(reducer: str) -> np.ndarray:
+    """The same reduction in long form: one (band, y, x, value) row per
+    clear pixel of every scene, grouped and reduced in plain Python."""
+    groups: dict[tuple[int, int, int], list[float]] = {}
+    for k in range(N_SCENES):
+        s = _scene(k)
+        for b in range(N_BANDS - 1):
+            for y in range(SIZE):
+                for x in range(SIZE):
+                    if s[-1, y, x] == 1:
+                        groups.setdefault((b, y, x), []).append(float(s[b, y, x]))
+    reduce = statistics.fmean if reducer == "mean" else statistics.median
+    out = np.full((N_BANDS - 1, SIZE, SIZE), np.nan)
+    for key, vals in groups.items():
+        out[key] = reduce(vals)
+    return out
+
+
 @pytest.mark.parametrize("reducer", ["mean", "median"])
-def test_composite_matches_numpy(reducer):
+def test_long_model_matches_numpy(reducer):
+    """composite over the whole scenes equals the long-form group-by
+    reduction and the masked numpy reduction."""
     got = composite((_scene(k) for k in range(N_SCENES)), reducer)
     assert got.dtype == np.float32
     assert got.shape == (N_BANDS - 1, SIZE, SIZE)
-    want = _oracle(reducer)
-    np.testing.assert_allclose(got, want, rtol=1e-6, equal_nan=True)
+    np.testing.assert_allclose(got, _long_oracle(reducer), rtol=1e-6, equal_nan=True)
+    np.testing.assert_allclose(got, _oracle(reducer), rtol=1e-6, equal_nan=True)
+    assert np.isnan(got[(slice(None), *NEVER_CLEAR)]).all()
+
+
+@pytest.mark.parametrize("reducer", ["mean", "median"])
+def test_chunk_model_matches_numpy(reducer):
+    """The build kernel composites one spatial chunk at a time; the
+    chunk results stitched together equal the masked numpy reduction
+    over the whole scenes."""
+    chunk = SIZE // 2
+    got = np.full((N_BANDS - 1, SIZE, SIZE), -1.0, "f4")
+    for y0 in range(0, SIZE, chunk):
+        for x0 in range(0, SIZE, chunk):
+            win = (slice(None), slice(y0, y0 + chunk), slice(x0, x0 + chunk))
+            part = composite((_scene(k)[win] for k in range(N_SCENES)), reducer)
+            assert part.dtype == np.float32
+            assert part.shape == (N_BANDS - 1, chunk, chunk)
+            got[win] = part
+    np.testing.assert_allclose(got, _oracle(reducer), rtol=1e-6, equal_nan=True)
     assert np.isnan(got[(slice(None), *NEVER_CLEAR)]).all()
 
 
